@@ -179,7 +179,6 @@ def test_video_near_dups_large_ids_exact(spark):
     division lost exactness) pack/unpack exactly via shifts; ids >= 2^57
     fail LOUDLY instead of silently wrapping and mispairing."""
     import pytest
-    from py4j.protocol import Py4JJavaError
 
     from docling_japanese_books_spark.multimodal.phash import video_near_dups
 
@@ -205,7 +204,10 @@ def test_video_near_dups_large_ids_exact(spark):
         [(1 << 57, _avi(base)), ((1 << 57) + 1, _avi(base))],
         "doc_id long, payload binary",
     )
-    with pytest.raises(Py4JJavaError, match="packable range"):
+    # the guard surfaces as Py4JJavaError or as PySpark's converted
+    # SparkRuntimeException depending on earlier session state: match the
+    # message through the common base
+    with pytest.raises(Exception, match="packable range"):
         video_near_dups(over, n_frames=8, min_matching_frames=1).collect()
 
     with pytest.raises(ValueError, match="n_frames"):

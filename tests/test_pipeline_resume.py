@@ -66,30 +66,217 @@ def test_kill_and_resume(spark, out_dir):
     assert total_in == N_PAGES
 
 
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return result, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_single_input_pass_per_wave(spark, out_dir):
-    """rows_in comes from Observation metrics on the write action — the
-    wave must make exactly ONE pass over the input (a second column-pruned
-    rescan per wave is an extra pass over the url column at 100 TB).
+    """rows_in and the output stats come from Observation metrics on the
+    write action — the wave must make exactly ONE pass over the input (a
+    second column-pruned rescan per wave is an extra pass over the url
+    column at 100 TB) and must not read its output back.
 
     Pin it with the Spark job count for one single-wave run: any
     reintroduced per-wave input action adds a job and trips the bound."""
     pages = generate_pages(spark, 100, seed=3)
-    sc = spark.sparkContext
-    sc.setJobGroup("wave_jobs", "single-wave pipeline run")
-    try:
-        run_extraction_pipeline(
+    _, jobs = _jobs_in_group(
+        spark,
+        "wave_jobs",
+        lambda: run_extraction_pipeline(
             spark, pages, out_dir, run_id="j", n_buckets=2, wave_size=2
-        )
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("wave_jobs")
-    # measured: 5 jobs for one wave (write carrying the observation,
-    # committed read + stats collect, manifest append, parquet footer job);
-    # the pre-fix per-wave groupBy-count rescan measured 7
-    assert len(jobs) <= 5, f"wave ran {len(jobs)} jobs — extra input pass?"
+        ),
+    )
+    # measured: 2 jobs for one wave on a fresh table (the write carrying
+    # both observations, the local manifest append); a committed-data
+    # read-back for the stats measured 5, a per-wave groupBy-count rescan 7
+    assert len(jobs) <= 2, f"wave ran {len(jobs)} jobs — extra input pass?"
     # and the observation-supplied lineage is still exact
     m = read_manifest(spark, out_dir)
     assert m.agg(F.sum("rows_in").alias("s")).collect()[0].s == 100
+
+
+def test_noop_resume_reads_manifest_once(spark, out_dir):
+    """A resume with nothing pending costs the manifest's schema read plus
+    ONE collect: the done set, the next snapshot id and the clash guard all
+    come from the same rows."""
+    pages = generate_pages(spark, 100, seed=3)
+    run_extraction_pipeline(
+        spark, pages, out_dir, run_id="j", n_buckets=2, wave_size=2, versioned=True
+    )
+    r, jobs = _jobs_in_group(
+        spark,
+        "noop_jobs",
+        lambda: run_extraction_pipeline(
+            spark, pages, out_dir, run_id="j", n_buckets=2, wave_size=2,
+            versioned=True,
+        ),
+    )
+    assert r.buckets_processed == [] and r.snapshot == 2
+    assert len(jobs) <= 2, f"no-op resume ran {len(jobs)} jobs"
+
+
+def test_pipeline_leaves_session_conf_alone(spark, out_dir):
+    """Dynamic partition overwrite is a per-write option: the pipeline and
+    the snapshot operations must not flip the caller's session conf, and
+    under the session default (static overwrite, which would wipe the whole
+    table) a resumed wave still replaces only its own buckets."""
+    from docling_japanese_books_spark.pipeline.driver import (
+        delete_where,
+        read_snapshot,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        pages = generate_pages(spark, 100, seed=37)
+        run_extraction_pipeline(
+            spark, pages, out_dir, run_id="a", n_buckets=4, wave_size=2,
+            max_waves=1,
+        )
+        run_extraction_pipeline(
+            spark, pages, out_dir, run_id="b", n_buckets=4, wave_size=2
+        )
+        assert spark.conf.get(key) == "STATIC"
+        assert spark.read.parquet(f"{out_dir}/data").count() == 100
+
+        vdir = f"{out_dir}/v"
+        run_extraction_pipeline(
+            spark, pages, vdir, run_id="v1", n_buckets=4, wave_size=4,
+            versioned=True,
+        )
+        d = delete_where(spark, vdir, "status <> 'ok'", run_id="del")
+        assert spark.conf.get(key) == "STATIC"
+        assert read_snapshot(spark, vdir).count() == 100 - d.rows_out
+        assert read_snapshot(spark, vdir, as_of=1).count() == 100
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_read_manifest_failure_is_not_missing_manifest(spark, out_dir, monkeypatch):
+    """Only a missing manifest path reads as "no manifest". Any other read
+    failure must propagate: swallowing it would reprocess every bucket and,
+    in versioned mode, skip the run_id clash guard."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    pages = generate_pages(spark, 100, seed=41)
+    run_extraction_pipeline(
+        spark, pages, out_dir, run_id="a", n_buckets=2, wave_size=2
+    )
+    real_parquet = DataFrameReader.parquet
+
+    def flaky(self, *paths, **kw):
+        if any("_manifest" in str(p) for p in paths):
+            raise OSError("simulated transient filesystem error")
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+    with pytest.raises(OSError, match="transient"):
+        run_extraction_pipeline(
+            spark, pages, out_dir, run_id="b", n_buckets=2, wave_size=2
+        )
+    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
+    # nothing was reprocessed, and a missing manifest still reads as None
+    assert read_manifest(spark, out_dir).count() == 2
+    assert read_manifest(spark, f"{out_dir}/nowhere") is None
+
+
+def test_manifest_without_snapshot_column_still_resumes(spark, out_dir):
+    """A manifest written before snapshots existed has no ``snapshot``
+    column: its entries still mark buckets done and count as snapshot 0."""
+    pages = generate_pages(spark, 100, seed=47)
+    r1 = run_extraction_pipeline(
+        spark, pages, out_dir, run_id="old", n_buckets=4, wave_size=2, max_waves=1
+    )
+    legacy = read_manifest(spark, out_dir).drop("snapshot").collect()
+    shutil.rmtree(f"{out_dir}/_manifest")
+    spark.createDataFrame(legacy).write.parquet(f"{out_dir}/_manifest")
+
+    r2 = run_extraction_pipeline(
+        spark, pages, out_dir, run_id="new", n_buckets=4, wave_size=2
+    )
+    assert sorted(r2.buckets_skipped) == sorted(r1.buckets_processed)
+    assert r2.snapshot == 1
+    assert spark.read.parquet(f"{out_dir}/data").count() == 100
+
+
+def _pdf_pages(spark):
+    """60 genuine PDF payloads plus one corrupt one."""
+    from pyspark.sql import Row
+
+    from docling_japanese_books_spark.extraction.pdf_bytes import text_to_pdf
+
+    ts = __import__("datetime").datetime(2024, 1, 1)
+    rows = [
+        Row(
+            url=f"s3://corpus/doc{i}.pdf",
+            warc_ts=ts,
+            html=text_to_pdf(f"pdf document number {i} body text"),
+            text="",
+            lang="ja",
+        )
+        for i in range(60)
+    ] + [Row(url="s3://corpus/bad.pdf", warc_ts=ts, html=b"corrupt", text="", lang="ja")]
+    return spark.createDataFrame(rows)
+
+
+@pytest.mark.parametrize("flavour", ["html", "pdf", "versioned"])
+def test_observed_stats_match_committed_data(spark, out_dir, flavour):
+    """The manifest's per-bucket output stats come from the write's
+    observe() metrics, not a read-back: they must equal a groupBy over the
+    data actually committed under each entry's partition."""
+    from docling_japanese_books_spark.pipeline.driver import extract_pdf_pages
+
+    kw = dict(n_buckets=4, wave_size=2)
+    if flavour == "pdf":
+        pages, kw["extractor"] = _pdf_pages(spark), extract_pdf_pages
+    else:
+        pages = generate_pages(spark, N_PAGES, seed=43)
+    versioned = flavour == "versioned"
+    # a killed run, its resume, and (versioned) a partial re-crawl
+    run_extraction_pipeline(
+        spark, pages, out_dir, run_id="a", max_waves=1, versioned=versioned, **kw
+    )
+    run_extraction_pipeline(spark, pages, out_dir, run_id="b", versioned=versioned, **kw)
+    if versioned:
+        run_extraction_pipeline(
+            spark, pages, out_dir, run_id="c", versioned=True, reprocess=[1, 2], **kw
+        )
+
+    stats = ["rows_out", "blocks_kept", "blocks_dropped", "parse_failures"]
+    keys = ["bucket", "run_id"] if versioned else ["bucket"]
+    manifest = {
+        tuple(r[k] for k in keys): tuple(r[s] for s in stats)
+        for r in read_manifest(spark, out_dir).collect()
+    }
+    committed = {
+        tuple(r[k] for k in keys): tuple(r[s] for s in stats)
+        for r in spark.read.parquet(f"{out_dir}/data")
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("rows_out"),
+            F.sum("blocks_kept").alias("blocks_kept"),
+            F.sum("blocks_dropped").alias("blocks_dropped"),
+            F.sum(
+                F.col("status").isin("decode_error", "parse_error").cast("long")
+            ).alias("parse_failures"),
+        )
+        .collect()
+    }
+    assert len(manifest) == (6 if versioned else 4)
+    assert manifest == committed
+    if not versioned:
+        assert sum(v[0] for v in manifest.values()) == (
+            61 if flavour == "pdf" else N_PAGES
+        )
+    # the corpora plant undecodable pages
+    assert sum(v[3] for v in manifest.values()) > 0
 
 
 def test_rerun_is_idempotent(spark, out_dir):
@@ -126,23 +313,9 @@ def test_pdf_corpus_pipeline(spark, out_dir):
     payload is genuine PDF bytes (writer in extraction/pdf_bytes) extract
     via the PDF extractor, resume correctly, and reproduce the source text
     byte-identically; corrupt payloads land as parse_failures, not crashes."""
-    from pyspark.sql import Row
-
-    from docling_japanese_books_spark.extraction.pdf_bytes import text_to_pdf
     from docling_japanese_books_spark.pipeline.driver import extract_pdf_pages
 
-    ts = __import__("datetime").datetime(2024, 1, 1)
-    rows = [
-        Row(
-            url=f"s3://corpus/doc{i}.pdf",
-            warc_ts=ts,
-            html=text_to_pdf(f"pdf document number {i} body text"),
-            text="",
-            lang="ja",
-        )
-        for i in range(60)
-    ] + [Row(url="s3://corpus/bad.pdf", warc_ts=ts, html=b"corrupt", text="", lang="ja")]
-    pages = spark.createDataFrame(rows)
+    pages = _pdf_pages(spark)
 
     r1 = run_extraction_pipeline(
         spark, pages, out_dir, run_id="p1", n_buckets=4, wave_size=2,
@@ -349,6 +522,33 @@ def test_nonversioned_zero_row_reprocess_clears_stale_partition(spark, out_dir):
     m = read_manifest(spark, out_dir)
     last = m.filter("run_id = 'empty'").collect()
     assert len(last) == 1 and last[0].rows_out == 0 and last[0].rows_in == 0
+
+
+def test_versioned_resume_clears_orphan_of_killed_attempt(spark, out_dir):
+    """Versioned twin of the stale-partition rule: a run killed after its
+    data write but before its manifest append leaves an orphan
+    (bucket, run_id) partition. If the resume under the same run_id finds
+    no rows for that bucket, the orphan must go, or the new snapshot
+    serves rows its manifest entry says do not exist."""
+    import os
+
+    from docling_japanese_books_spark.pipeline.driver import read_snapshot
+
+    pages = generate_pages(spark, 100, seed=53)
+    run_extraction_pipeline(
+        spark, pages, out_dir, run_id="k", n_buckets=4, wave_size=4,
+        versioned=True,
+    )
+    shutil.rmtree(f"{out_dir}/_manifest")  # killed before the append
+    pages2 = pages.filter(F.pmod(F.xxhash64("url"), F.lit(4)) != 2)
+    r = run_extraction_pipeline(
+        spark, pages2, out_dir, run_id="k", n_buckets=4, wave_size=4,
+        versioned=True,
+    )
+    assert not os.path.exists(f"{out_dir}/data/bucket=2/run_id=k")
+    assert read_snapshot(spark, out_dir).count() == pages2.count() == r.rows_out
+    entry = read_manifest(spark, out_dir).filter("bucket = 2").collect()
+    assert len(entry) == 1 and entry[0].rows_out == 0
 
 
 def test_expiry_watermark_survives_interrupted_delete(spark, out_dir, monkeypatch):
