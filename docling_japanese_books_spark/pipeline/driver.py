@@ -16,11 +16,13 @@ it (SURVEY §4 item 2):
   skipped (anti-join of bucket ids against the manifest);
 - buckets are processed in waves (several buckets per Spark job) so progress
   checkpoints land incrementally while jobs stay large enough to saturate
-  executors. Each wave costs two Spark jobs: the partitioned write, whose
+  executors. Each wave costs ONE Spark job: the partitioned write, whose
   ``observe()`` metrics supply the wave's manifest stats (rows in/out,
-  blocks, parse failures) without reading the output back, and one append
-  of the wave's manifest rows from a driver-local table (``LocalTableScan``,
-  no Python worker). A run reads the manifest once, up front.
+  blocks, parse failures) without reading the output back. The manifest
+  commit is driver-local, as Iceberg commits its metadata: pyarrow writes
+  the wave's rows to a hidden temp file and renames it into ``_manifest``,
+  so a kill mid-append leaves no visible entry. A run reads the manifest
+  once, up front, also with pyarrow, so a no-op resume runs no Spark job.
 
 At 100 TB / 1000 executors the same structure holds: n_buckets scales to
 O(10k), wave_size to O(100); the extraction map itself is shuffle-free
@@ -29,16 +31,23 @@ O(10k), wave_size to O(100); the extraction map itself is shuffle-free
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
+import uuid
+from collections import namedtuple
 from dataclasses import dataclass
 from pathlib import Path
 from typing import List, Optional, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow.fs import FileSystem
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -58,6 +67,14 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("snapshot", T.LongType(), False),
     ]
 )
+_ARROW_MANIFEST = to_arrow_schema(MANIFEST_SCHEMA)
+
+# the bookkeeping columns a run needs from the manifest, read nullable: a
+# manifest written before snapshots existed has no ``snapshot`` column
+_Entry = namedtuple("_Entry", "bucket status run_id snapshot")
+_ENTRY_SCHEMA = pa.schema(
+    [_ARROW_MANIFEST.field(n).with_nullable(True) for n in _Entry._fields]
+)
 
 
 @dataclass
@@ -76,11 +93,16 @@ def _data_path(output_dir: str) -> str:
     return str(Path(output_dir) / "data")
 
 
+def _manifest_dir(output_dir: str):
+    """(filesystem, path) of the manifest directory. The driver is local-
+    filesystem only (its stale-partition clears use ``shutil``)."""
+    return FileSystem.from_uri(os.path.abspath(_manifest_path(output_dir)))
+
+
 def read_manifest(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
-    """The manifest table, or None when none was written yet. Only a missing
-    path counts as "no manifest": any other read failure propagates, since
-    treating it as empty would reprocess every bucket and skip the
-    versioned run_id clash guard."""
+    """The manifest as a Spark table (for the snapshot reads and the
+    snapshot log), or None when none was written yet. Only a missing path
+    counts as "no manifest": any other read failure propagates."""
     try:
         return spark.read.parquet(_manifest_path(output_dir))
     except AnalysisException:
@@ -88,36 +110,39 @@ def read_manifest(spark: SparkSession, output_dir: str) -> Optional[DataFrame]:
 
 
 def completed_buckets(spark: SparkSession, output_dir: str) -> set:
-    m = read_manifest(spark, output_dir)
-    if m is None:
-        return set()
-    return {
-        r.bucket for r in m.filter(F.col("status") == "done").select("bucket").collect()
-    }
+    return {r.bucket for r in _manifest_entries(output_dir) if r.status == "done"}
 
 
-def _manifest_entries(m: Optional[DataFrame]) -> list:
-    """The manifest's bookkeeping columns in ONE collect: the done set, the
-    latest snapshot id and the run_id clash guard all come from these rows.
-    A manifest written before snapshots existed has no ``snapshot`` column;
-    its entries count as snapshot 0."""
-    if m is None:
+def _manifest_entries(output_dir: str) -> List[_Entry]:
+    """The manifest's bookkeeping columns, read on the driver with pyarrow
+    (no Spark job): the done set, the latest snapshot id and the run_id
+    clash guard all come from these rows. The explicit schema casts a
+    legacy Spark-written file's long ``bucket`` and fills its missing
+    ``snapshot`` (snapshot 0), whichever file is read first; hidden files,
+    such as a killed append's temp file, are skipped. Only a missing
+    directory means no entries: any other read failure propagates, since
+    treating it as empty would reprocess every bucket and skip the
+    versioned run_id clash guard."""
+    fs, path = _manifest_dir(output_dir)
+    try:
+        t = pq.read_table(path, schema=_ENTRY_SCHEMA, filesystem=fs)
+    except FileNotFoundError:
         return []
-    snap = F.col("snapshot") if "snapshot" in m.columns else F.lit(0).cast("long")
-    return m.select("bucket", "status", "run_id", snap.alias("snapshot")).collect()
+    cols = (t[n].to_pylist() for n in _Entry._fields)
+    return [_Entry(b, st, rid, snap or 0) for b, st, rid, snap in zip(*cols)]
 
 
-def _snapshot_entries(spark: SparkSession, output_dir: str) -> list:
+def _snapshot_entries(output_dir: str) -> List[_Entry]:
     """``_manifest_entries`` for the snapshot-maintenance operations, which
     need a versioned table's manifest."""
-    m = read_manifest(spark, output_dir)
-    if m is None or "snapshot" not in m.columns:
+    entries = _manifest_entries(output_dir)
+    if not any(r.snapshot for r in entries):
         raise ValueError(f"no snapshot manifest at {output_dir}")
-    return _manifest_entries(m)
+    return entries
 
 
-def _latest_snapshot(entries: list) -> int:
-    return max((int(r.snapshot or 0) for r in entries), default=0)
+def _latest_snapshot(entries: List[_Entry]) -> int:
+    return max((r.snapshot for r in entries), default=0)
 
 
 def _check_run_id_clash(entries: list, run_id: str, buckets, remedy: str) -> None:
@@ -134,17 +159,18 @@ def _check_run_id_clash(entries: list, run_id: str, buckets, remedy: str) -> Non
         )
 
 
-def _append_manifest(spark: SparkSession, output_dir: str, rows: list) -> None:
-    """Append MANIFEST_SCHEMA-ordered tuples as one parquet file. The batch
-    goes in as an Arrow table, so the plan is a ``LocalTableScan`` (no
-    pickled RDD, no Python worker) whatever the session's Arrow setting."""
-    import pyarrow as pa
-
-    names = MANIFEST_SCHEMA.fieldNames()
-    table = pa.table({n: list(col) for n, col in zip(names, zip(*rows))})
-    spark.createDataFrame(table, MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(_manifest_path(output_dir))
+def _append_manifest(output_dir: str, rows: list) -> None:
+    """Commit MANIFEST_SCHEMA-ordered tuples as one parquet file from the
+    driver: write it under a hidden temp name, then rename it into place.
+    pyarrow and Spark both skip hidden files, so a kill before the rename
+    leaves the manifest as it was and the resume redoes the wave."""
+    fs, path = _manifest_dir(output_dir)
+    fs.create_dir(path)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = f"{path}/.{name}.tmp"
+    table = pa.table(list(zip(*rows)), schema=_ARROW_MANIFEST)
+    pq.write_table(table, tmp, filesystem=fs)
+    fs.move(tmp, f"{path}/{name}")
 
 
 # per-bucket output stats, in MANIFEST_SCHEMA order
@@ -313,7 +339,7 @@ def run_extraction_pipeline(
     """
     extractor = extractor or _extract_html
 
-    entries = _manifest_entries(read_manifest(spark, output_dir))
+    entries = _manifest_entries(output_dir)
     done = {r.bucket for r in entries if r.status == "done"}
     redo = {int(b) for b in (reprocess or ())}
     pending = [b for b in range(n_buckets) if b not in done or b in redo]
@@ -398,7 +424,7 @@ def run_extraction_pipeline(
             )
             total_rows_out += stats[0]
             processed.append(b)
-        _append_manifest(spark, output_dir, manifest_rows)
+        _append_manifest(output_dir, manifest_rows)
 
     return PipelineResult(
         buckets_processed=processed,
@@ -567,7 +593,7 @@ def delete_where(
     rewrite against partially overwritten partitions — materialize such
     frames (collect/checkpoint) before calling."""
     t0 = time.time()
-    entries = _snapshot_entries(spark, output_dir)
+    entries = _snapshot_entries(output_dir)
     prev_snap = _latest_snapshot(entries)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
 
@@ -610,7 +636,6 @@ def delete_where(
     wall_ms = int((time.time() - t0) * 1000)
     snapshot = prev_snap + 1
     _append_manifest(
-        spark,
         output_dir,
         [
             (b, run_id, source, "done", counts[b][0], *stats.get(b, _NO_STATS),
@@ -654,7 +679,7 @@ def merge_into(
     Returns a PipelineResult: rows_out = rows written into the rewritten
     buckets (updates + inserts + untouched co-bucketed rows)."""
     t0 = time.time()
-    entries = _snapshot_entries(spark, output_dir)
+    entries = _snapshot_entries(output_dir)
     prev_snap = _latest_snapshot(entries)
 
     # manifest covers every bucket ever written
@@ -693,7 +718,6 @@ def merge_into(
     wall_ms = int((time.time() - t0) * 1000)
     snapshot = prev_snap + 1
     _append_manifest(
-        spark,
         output_dir,
         [
             (b, run_id, source_name, "done", src_counts.get(b, 0),
@@ -724,7 +748,7 @@ def compact_buckets(
     Row content is bit-identical by construction; only the file layout
     changes. ``buckets=None`` compacts every live bucket."""
     t0 = time.time()
-    entries = _snapshot_entries(spark, output_dir)
+    entries = _snapshot_entries(output_dir)
     prev_snap = _latest_snapshot(entries)
     # every bucket in the manifest has exactly one live entry
     live = {int(r.bucket) for r in entries}
@@ -751,7 +775,7 @@ def compact_buckets(
         st = stats.get(b, _NO_STATS)
         # rows_in == rows_out: a rewrite
         rows.append((b, run_id, "compact", "done", st[0], *st, wall_ms, snapshot))
-    _append_manifest(spark, output_dir, rows)
+    _append_manifest(output_dir, rows)
     return PipelineResult(
         buckets_processed=[int(b) for b in targets],
         buckets_skipped=sorted(live - set(targets)),

@@ -92,19 +92,21 @@ def test_single_input_pass_per_wave(spark, out_dir):
             spark, pages, out_dir, run_id="j", n_buckets=2, wave_size=2
         ),
     )
-    # measured: 2 jobs for one wave on a fresh table (the write carrying
-    # both observations, the local manifest append); a committed-data
-    # read-back for the stats measured 5, a per-wave groupBy-count rescan 7
-    assert len(jobs) <= 2, f"wave ran {len(jobs)} jobs — extra input pass?"
+    # measured: 1 job for one wave on a fresh table (the write carrying
+    # both observations; the manifest append is a driver-local pyarrow
+    # write, no job); a Spark-side manifest append measured 2, a
+    # committed-data read-back for the stats 5, a per-wave groupBy-count
+    # rescan 7
+    assert len(jobs) == 1, f"wave ran {len(jobs)} jobs — extra input pass?"
     # and the observation-supplied lineage is still exact
     m = read_manifest(spark, out_dir)
     assert m.agg(F.sum("rows_in").alias("s")).collect()[0].s == 100
 
 
 def test_noop_resume_reads_manifest_once(spark, out_dir):
-    """A resume with nothing pending costs the manifest's schema read plus
-    ONE collect: the done set, the next snapshot id and the clash guard all
-    come from the same rows."""
+    """A resume with nothing pending runs no Spark job: the driver reads the
+    manifest once with pyarrow, and the done set, the next snapshot id and
+    the clash guard all come from those rows."""
     pages = generate_pages(spark, 100, seed=3)
     run_extraction_pipeline(
         spark, pages, out_dir, run_id="j", n_buckets=2, wave_size=2, versioned=True
@@ -118,7 +120,7 @@ def test_noop_resume_reads_manifest_once(spark, out_dir):
         ),
     )
     assert r.buckets_processed == [] and r.snapshot == 2
-    assert len(jobs) <= 2, f"no-op resume ran {len(jobs)} jobs"
+    assert len(jobs) == 0, f"no-op resume ran {len(jobs)} jobs"
 
 
 def test_pipeline_leaves_session_conf_alone(spark, out_dir):
@@ -163,25 +165,25 @@ def test_read_manifest_failure_is_not_missing_manifest(spark, out_dir, monkeypat
     """Only a missing manifest path reads as "no manifest". Any other read
     failure must propagate: swallowing it would reprocess every bucket and,
     in versioned mode, skip the run_id clash guard."""
-    from pyspark.sql.readwriter import DataFrameReader
+    import pyarrow.parquet as pq
 
     pages = generate_pages(spark, 100, seed=41)
     run_extraction_pipeline(
         spark, pages, out_dir, run_id="a", n_buckets=2, wave_size=2
     )
-    real_parquet = DataFrameReader.parquet
+    real_read_table = pq.read_table
 
-    def flaky(self, *paths, **kw):
-        if any("_manifest" in str(p) for p in paths):
+    def flaky(source, *a, **kw):
+        if "_manifest" in str(source):
             raise OSError("simulated transient filesystem error")
-        return real_parquet(self, *paths, **kw)
+        return real_read_table(source, *a, **kw)
 
-    monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+    monkeypatch.setattr(pq, "read_table", flaky)
     with pytest.raises(OSError, match="transient"):
         run_extraction_pipeline(
             spark, pages, out_dir, run_id="b", n_buckets=2, wave_size=2
         )
-    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
+    monkeypatch.setattr(pq, "read_table", real_read_table)
     # nothing was reprocessed, and a missing manifest still reads as None
     assert read_manifest(spark, out_dir).count() == 2
     assert read_manifest(spark, f"{out_dir}/nowhere") is None
@@ -204,6 +206,95 @@ def test_manifest_without_snapshot_column_still_resumes(spark, out_dir):
     assert sorted(r2.buckets_skipped) == sorted(r1.buckets_processed)
     assert r2.snapshot == 1
     assert spark.read.parquet(f"{out_dir}/data").count() == 100
+
+
+@pytest.mark.parametrize("kill_at", [0, 1])
+def test_killed_manifest_append_redoes_that_wave(
+    spark, out_dir, monkeypatch, kill_at
+):
+    """A kill between the manifest file's write and its rename leaves a
+    hidden ``_manifest/.<name>.tmp``. Both manifest readers must ignore it,
+    so the resume redoes exactly the killed wave's buckets."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    pages = generate_pages(spark, 100, seed=59)
+    kw = dict(n_buckets=4, wave_size=2)
+    real_write = pq.write_table
+    calls = []
+
+    def killed(table, where, *a, **k):
+        calls.append(where)
+        real_write(table, where, *a, **k)
+        if len(calls) > kill_at:
+            raise RuntimeError("simulated kill before the manifest rename")
+
+    monkeypatch.setattr(pq, "write_table", killed)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_extraction_pipeline(spark, pages, out_dir, run_id="a", **kw)
+    monkeypatch.setattr(pq, "write_table", real_write)
+
+    assert len(glob.glob(f"{out_dir}/_manifest/.*.tmp")) == 1
+    done = set(range(2 * kill_at))
+    assert completed_buckets(spark, out_dir) == done
+    m = read_manifest(spark, out_dir)
+    assert (set() if m is None else {r.bucket for r in m.collect()}) == done
+
+    r = run_extraction_pipeline(spark, pages, out_dir, run_id="b", max_waves=1, **kw)
+    killed_wave = [2 * kill_at, 2 * kill_at + 1]
+    assert r.buckets_processed == killed_wave
+    run_extraction_pipeline(spark, pages, out_dir, run_id="c", **kw)
+    final = read_manifest(spark, out_dir).collect()
+    assert sorted(r.bucket for r in final) == [0, 1, 2, 3]
+    assert spark.read.parquet(f"{out_dir}/data").count() == 100
+
+
+@pytest.mark.parametrize("legacy_name", ["0-legacy.parquet", "zz-legacy.parquet"])
+def test_legacy_manifest_file_beside_arrow_files(spark, out_dir, legacy_name):
+    """A Spark-written manifest file from before snapshots existed (no
+    ``snapshot`` column, long ``bucket``) beside Arrow-written files: the
+    done set stays right and the next snapshot is the latest + 1, whichever
+    file sorts first."""
+    import glob
+    import os
+
+    pages = generate_pages(spark, 100, seed=61)
+    legacy_dir = f"{out_dir}/legacy"
+    spark.createDataFrame(
+        [(3, "old", "pages", "done", 0, 0, 0, 0, 0, 0)],
+        "bucket long, run_id string, source string, status string, rows_in long, "
+        "rows_out long, blocks_kept long, blocks_dropped long, "
+        "parse_failures long, wall_ms long",
+    ).coalesce(1).write.parquet(legacy_dir)
+    r1 = run_extraction_pipeline(
+        spark, pages, out_dir, run_id="a", n_buckets=4, wave_size=2, max_waves=1
+    )
+    (legacy,) = glob.glob(f"{legacy_dir}/part-*.parquet")
+    os.rename(legacy, f"{out_dir}/_manifest/{legacy_name}")
+
+    assert completed_buckets(spark, out_dir) == {*r1.buckets_processed, 3}
+    r2 = run_extraction_pipeline(
+        spark, pages, out_dir, run_id="b", n_buckets=4, wave_size=2
+    )
+    assert sorted(r2.buckets_skipped) == sorted({*r1.buckets_processed, 3})
+    assert r2.snapshot == r1.snapshot + 1
+    assert completed_buckets(spark, out_dir) == {0, 1, 2, 3}
+
+
+def test_arrow_manifest_schema_matches_spark_schema(spark, out_dir):
+    """The driver writes the manifest with pyarrow; Spark must read it back
+    with exactly MANIFEST_SCHEMA's column names and types."""
+    from docling_japanese_books_spark.pipeline.driver import MANIFEST_SCHEMA
+
+    pages = generate_pages(spark, 50, seed=67)
+    run_extraction_pipeline(
+        spark, pages, out_dir, run_id="s", n_buckets=2, wave_size=1
+    )
+    got = read_manifest(spark, out_dir).schema
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in MANIFEST_SCHEMA
+    ]
 
 
 def _pdf_pages(spark):
