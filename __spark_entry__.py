@@ -81,17 +81,17 @@ DEMOTED: dict[str, tuple[str, ...]] = {
     # unique coverage) promoted in; redundant-coverage greens out
     # same deterministic md5-bucket assignment algebra, richer query
     "doc_hash_split": ("doc_stratified_sample",),
-    # lossless-codec roundtrip shape green via the PNG row; GIF specifics
-    # (LZW, palettes) are pinned by tests/test_gif_codec.py external fixtures
-    "gif_pixel_roundtrip": ("png_pixel_roundtrip", "image_manifest"),
-    # same lossless-roundtrip shape; TIFF specifics (IFD walk, byte
-    # orders, PackBits, photometrics) pinned by tests/test_tiff_codec.py
-    # hand-assembled fixtures — demoted from birth like the GIF row
+    # round-9 retirements (code that nothing in the pipeline, CLI or
+    # window reaches is deleted): gif_pixel_roundtrip and
+    # webp_pixel_roundtrip deleted outright with their codecs — both were
+    # demoted from birth, the reference's only image path is PNG, and the
+    # lossless-roundtrip shape stays green via png_pixel_roundtrip /
+    # image_manifest. GIF/WebP bytes now take each image stage's per-row
+    # failure path, pinned by tests/test_multimodal.py.
+    # lossless-roundtrip shape green via the PNG row; TIFF specifics (IFD
+    # walk, byte orders, PackBits, photometrics) pinned by
+    # tests/test_tiff_codec.py hand-assembled fixtures — demoted from birth
     "tiff_pixel_roundtrip": ("png_pixel_roundtrip", "image_manifest"),
-    # same shape again; VP8L specifics (full prefix codes, LZ77, cache,
-    # transforms) pinned by tests/test_webp_codec.py hand-assembled
-    # bitstreams — demoted from birth
-    "webp_pixel_roundtrip": ("png_pixel_roundtrip", "image_manifest"),
     # media-roundtrip shape green via the WAV row; AVI specifics (RIFF
     # lists, DIB stride/bottom-up math, real frame sampling) pinned by
     # tests/test_avi_codec.py hand-assembled fixture — demoted from birth

@@ -5,7 +5,7 @@ converts them through Docling like every other format
 (processor.py:285-319 feeds the whole discovered batch to
 ``converter.convert_all``). Docling isn't in this container, but OOXML
 is just a zip of XML parts, so the same pure-Python discipline that
-closed PDF/PNG/JPEG/GIF/WAV closes the last accepted-but-unparseable
+closed PDF/PNG/JPEG/WAV closes the last accepted-but-unparseable
 formats: stdlib ``zipfile`` for the container, ``xml.etree`` for the
 parts.
 

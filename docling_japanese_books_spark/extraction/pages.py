@@ -26,7 +26,6 @@ from typing import Iterator, List
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 PAGES_SCHEMA = T.StructType(
@@ -178,9 +177,3 @@ def generate_pages(
             )
 
     return spark.range(n).mapInPandas(gen, PAGES_SCHEMA)
-
-
-def page_id_hash(url_col) -> "F.Column":
-    """Stable 64-bit document id from url (X10 analog for the north rule:
-    the key is the url, ref processor.py:482-483 uses the file stem)."""
-    return F.xxhash64(url_col)

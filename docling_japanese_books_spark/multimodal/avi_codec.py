@@ -3,7 +3,7 @@
 Un-gates the video branch of ``decode_media_real`` the same way
 ``wav_codec`` un-gated audio (round-4 verdict missing #4: "video …
 env-gated … ffmpeg absent"): the AVI container is plain RIFF — which
-this repo already parses for WAV and WebP — and the DIB ('DIB ' /
+this repo already parses for WAV — and the DIB ('DIB ' /
 BI_RGB) payload is raw 24-bit BGR bottom-up scanlines with 4-byte row
 padding, i.e. no codec at all. That covers the honest subset a
 container with no ffmpeg can support: real frames, real timestamps,

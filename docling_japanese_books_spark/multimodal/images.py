@@ -5,10 +5,9 @@ The reference extracts PNGs from PDFs, hashes them, and manifests them
 real — schemas, batch iteration, partitioning, manifest aggregation — and
 pixel decode is real for the dominant web formats plus scanned-book
 masters, all pure-Python from public specs: PNG (``png_codec.py``),
-baseline JPEG (``jpeg_codec.py``), GIF (``gif_codec.py``), baseline
-TIFF (``tiff_codec.py``). ``decode_image_real`` dispatches on signature
-and only needs PIL for anything else (WebP/...). The default
-``decode_fn`` remains the
+baseline JPEG (``jpeg_codec.py``) and baseline TIFF (``tiff_codec.py``).
+``decode_pixels`` dispatches on signature; ``decode_image_real`` only
+needs PIL for anything else. The default ``decode_fn`` remains the
 deterministic fake so fixture-driven queries stay library-independent;
 pass ``decode_image_real`` to run on real pixels.
 """
@@ -52,70 +51,61 @@ def fake_decode(payload: bytes) -> dict:
     return dict(width=width, height=height, format=fmt, feature=feature)
 
 
-def decode_image_real(payload: bytes) -> dict:
-    """Real decode path: PNGs and baseline JPEGs decode pure-Python
-    (multimodal/png_codec, multimodal/jpeg_codec — real pixels, real
-    features, no PIL needed); other formats go through PIL when installed,
-    else raise. Corrupt/out-of-subset bytes raise ValueError —
-    extract_image_features isolates that per row."""
-    from .png_codec import PNG_SIGNATURE, image_features, png_to_pixels
+class UnsupportedImageFormat(ValueError):
+    """Bytes whose signature names no pure-Python-decodable format."""
+
+
+def decode_pixels(payload: bytes) -> tuple:
+    """``(format, pixels)`` by byte-signature dispatch — the package's one
+    signature -> decoder map, shared by ``decode_image_real``,
+    ``phash.image_dhash`` and ``media.resize_image_real``. Decodes PNG,
+    baseline JPEG and baseline TIFF pure-Python. Corrupt/out-of-subset
+    bytes raise ValueError; any other signature raises
+    ``UnsupportedImageFormat`` (a ValueError)."""
+    from .png_codec import PNG_SIGNATURE, png_to_pixels
 
     if payload[: len(PNG_SIGNATURE)] == PNG_SIGNATURE:
-        px = png_to_pixels(payload)
-        return dict(
-            width=int(px.shape[1]),
-            height=int(px.shape[0]),
-            format="png",
-            feature=image_features(px),
-        )
+        return "png", png_to_pixels(payload)
     if payload[:2] == b"\xff\xd8":  # JPEG SOI
         from .jpeg_codec import jpeg_to_pixels
 
-        px = jpeg_to_pixels(payload)
-        return dict(
-            width=int(px.shape[1]),
-            height=int(px.shape[0]),
-            format="jpeg",
-            feature=image_features(px),
-        )
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif_codec import gif_to_pixels
-
-        px = gif_to_pixels(payload)
-        return dict(
-            width=int(px.shape[1]),
-            height=int(px.shape[0]),
-            format="gif",
-            feature=image_features(px),
-        )
+        return "jpeg", jpeg_to_pixels(payload)
     if payload[:4] in (b"II*\x00", b"MM\x00*"):
         from .tiff_codec import tiff_to_pixels
 
-        px = tiff_to_pixels(payload)
-        return dict(
-            width=int(px.shape[1]),
-            height=int(px.shape[0]),
-            format="tiff",
-            feature=image_features(px),
-        )
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp_codec import webp_to_pixels
+        return "tiff", tiff_to_pixels(payload)
+    raise UnsupportedImageFormat("unrecognized image signature")
 
-        px = webp_to_pixels(payload)  # lossless VP8L; lossy -> ValueError
-        return dict(
-            width=int(px.shape[1]),
-            height=int(px.shape[0]),
-            format="webp",
-            feature=image_features(px),
-        )
+
+def decode_image_real(payload: bytes) -> dict:
+    """Real decode path: PNG, baseline JPEG and baseline TIFF decode
+    pure-Python through ``decode_pixels`` (real pixels, real features, no
+    PIL needed); other formats go through PIL when installed, else raise.
+    Corrupt/out-of-subset bytes raise ValueError —
+    extract_image_features isolates that per row."""
+    from .png_codec import image_features
+
+    try:
+        fmt, px = decode_pixels(payload)
+    except UnsupportedImageFormat:
+        return _decode_with_pil(payload)
+    return dict(
+        width=int(px.shape[1]),
+        height=int(px.shape[0]),
+        format=fmt,
+        feature=image_features(px),
+    )
+
+
+def _decode_with_pil(payload: bytes) -> dict:
     try:
         import io
 
         from PIL import Image  # type: ignore
     except ImportError as ex:  # pragma: no cover - container has no PIL
         raise NotImplementedError(
-            "WebP/other decode requires PIL; PNG, baseline JPEG, GIF and "
-            "baseline TIFF decode pure-Python"
+            "decoding formats other than PNG, baseline JPEG and baseline "
+            "TIFF requires PIL"
         ) from ex
     img = Image.open(io.BytesIO(payload))
     return dict(

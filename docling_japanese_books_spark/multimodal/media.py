@@ -163,40 +163,19 @@ def resize_image_stub(payload: bytes, width: int, height: int) -> bytes:
 def resize_image_real(payload: bytes, width: int, height: int) -> bytes:
     """REAL resize for every pure-Python-decodable format (the
     reference's image path is PNG, image_processor.py:29-76; this engine
-    also decodes baseline JPEG, GIF, baseline TIFF and lossless WebP):
-    decode -> nearest-neighbor -> re-encode as PNG (the lossless
-    transcode target, so a resized JPEG never re-loses quality).
-    Undecodable payloads fall back to the stub (PIL would slot in
-    here where installed)."""
-    from .png_codec import PNG_SIGNATURE, pixels_to_png, resize_nearest
+    also decodes baseline JPEG and baseline TIFF): decode -> nearest-
+    neighbor -> re-encode as PNG (the lossless transcode target, so a
+    resized JPEG never re-loses quality). Undecodable payloads fall back
+    to the stub (PIL would slot in here where installed)."""
+    from .images import decode_pixels
+    from .png_codec import pixels_to_png, resize_nearest
 
-    px = None
     try:
-        if payload[: len(PNG_SIGNATURE)] == PNG_SIGNATURE:
-            from .png_codec import png_to_pixels
-
-            px = png_to_pixels(payload)
-        elif payload[:2] == b"\xff\xd8":
-            from .jpeg_codec import jpeg_to_pixels
-
-            px = jpeg_to_pixels(payload)
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif_codec import gif_to_pixels
-
-            px = gif_to_pixels(payload)
-        elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-            from .tiff_codec import tiff_to_pixels
-
-            px = tiff_to_pixels(payload)
-        elif payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-            from .webp_codec import webp_to_pixels
-
-            px = webp_to_pixels(payload)
+        _fmt, px = decode_pixels(payload)
     except ValueError:
-        px = None  # corrupt: stub keeps the binary-in/binary-out contract
-    if px is None:
+        # unrecognized or corrupt: the stub keeps the binary-in/binary-out
+        # contract
         return resize_image_stub(payload, width, height)
-    # PNG encodes gray/RGB/RGBA alike, so WebP alpha survives the transcode
     return pixels_to_png(resize_nearest(px, width, height))
 
 

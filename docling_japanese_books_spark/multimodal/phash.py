@@ -10,7 +10,7 @@ downsample onto an 8 x 9 grid -> 64 sign bits of horizontal neighbour
 differences. Properties the tests pin:
 
 - invariant to global brightness shifts (differences cancel the
-  offset) and to FORMAT transcodes (PNG/TIFF/GIF of the same pixels
+  offset) and to FORMAT transcodes (PNG/TIFF of the same pixels
   hash identically — exercised with this repo's own pure-Python
   codecs, not mocks);
 - small pixel perturbations flip few bits (hamming-near), unrelated
@@ -33,32 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .png_codec import PNG_SIGNATURE, png_to_pixels
-
-
-def _decode_pixels(payload: bytes) -> np.ndarray:
-    """Pixel array from bytes by signature dispatch — the same format
-    set as images.decode_image_real, returning pixels instead of
-    features. ValueError on anything unrecognized/corrupt."""
-    if payload[: len(PNG_SIGNATURE)] == PNG_SIGNATURE:
-        return png_to_pixels(payload)
-    if payload[:2] == b"\xff\xd8":
-        from .jpeg_codec import jpeg_to_pixels
-
-        return jpeg_to_pixels(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif_codec import gif_to_pixels
-
-        return gif_to_pixels(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff_codec import tiff_to_pixels
-
-        return tiff_to_pixels(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp_codec import webp_to_pixels
-
-        return webp_to_pixels(payload)
-    raise ValueError("unrecognized image signature")
+from .images import decode_pixels as decode_any_pixels
 
 
 def dhash64(pixels: np.ndarray) -> int:
@@ -111,7 +86,7 @@ def image_dhash(
     """(id_col, dhash) per image — one Arrow stage, per-row isolation
     (undecodable payloads hash to null and silently leave the near-dup
     candidate pool, mirroring extract_image_features)."""
-    decode = decode_pixels or _decode_pixels
+    decode = decode_pixels or (lambda payload: decode_any_pixels(payload)[1])
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

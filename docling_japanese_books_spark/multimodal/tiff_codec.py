@@ -1,6 +1,6 @@
 """Pure-Python baseline TIFF 6.0 codec (decode + fixture writer).
 
-Closes most of the remaining image-format tail after PNG/JPEG/GIF
+Closes most of the remaining image-format tail after PNG/JPEG
 (round-4 verdict "What's missing" #4): scanned-book corpora — the
 reference's own domain — ship TIFF masters, and this container has no
 PIL. Scope is the baseline subset that covers them:

@@ -143,44 +143,6 @@ def minhash_signature_udf(m: int = 64, shingle_n: int = 4, seed: int = 42):
     return _sig
 
 
-def minhash_signature(
-    text: Column, m: int = 64, shingle_n: int = 4, seed: int = 42
-) -> Column:
-    """Pure-column-expression MinHash (SQL-only fallback; ~30x slower than
-    minhash_signature_udf because HOFs are interpreted — kept for
-    environments where Python workers are unavailable):
-    sig_j = min over shingles s of ((a_j * (xxhash64(s) mod p) + b_j) mod p).
-    Empty/short text -> signature of all p (matches nothing).
-
-    NOTE: hash differs from the UDF variant (xxhash64 vs blake2b) — pick one
-    per pipeline; signatures are not interchangeable."""
-    a_params, b_params = _perm_params(m, seed)
-    shingles = char_ngrams(text, shingle_n)
-    hashed = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-    # One expression, one pass: an outer transform over the literal param
-    # array references `hashed` once, so shingle hashing runs once per row —
-    # NOT once per permutation (the naive F.array(*[min(...) for j])
-    # duplicates the shingle-hash subtree m times and is ~50x slower).
-    params = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in zip(a_params, b_params)
-        ]
-    )
-    return F.transform(
-        params,
-        lambda p: F.coalesce(
-            F.array_min(
-                F.transform(
-                    hashed,
-                    lambda h: F.pmod(h * p["a"] + p["b"], F.lit(_MERSENNE)),
-                )
-            ),
-            F.lit(_MERSENNE),
-        ),
-    )
-
-
 def signature_similarity(sig_a: Column, sig_b: Column) -> Column:
     """Fraction of agreeing signature positions ≈ Jaccard similarity.
 

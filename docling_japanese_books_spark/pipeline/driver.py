@@ -506,13 +506,10 @@ def expire_snapshots(
     kept snapshot). Reads below the watermark raise in ``read_snapshot``.
     Deletion is a driver-side directory remove per expired partition
     (swap in the object-store delete API on a real cluster). Returns the
-    number of partitions deleted."""
-    m = read_manifest(spark, output_dir)
-    if m is None or "snapshot" not in m.columns:
-        raise ValueError(f"no snapshot manifest at {output_dir}")
-    snaps = sorted(
-        r.snapshot for r in m.select("snapshot").distinct().collect()
-    )
+    number of partitions deleted. The manifest is read on the driver
+    with pyarrow: expiry runs no Spark job."""
+    entries = _snapshot_entries(output_dir)
+    snaps = sorted({r.snapshot for r in entries})
     if len(snaps) <= keep_last:
         return 0
     watermark = snaps[-keep_last]
@@ -521,25 +518,14 @@ def expire_snapshots(
     # (per-bucket latest entry with snapshot <= watermark — a bucket
     # rewritten at the watermark makes its older entries dead) plus every
     # entry written after it
-    w = Window.partitionBy("bucket").orderBy(F.desc("snapshot"))
-    state_at_watermark = (
-        m.filter(F.col("snapshot") <= watermark)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("bucket", "run_id")
-    )
-    live = {
-        (r.bucket, r.run_id)
-        for r in m.filter(F.col("snapshot") > watermark)
-        .select("bucket", "run_id")
-        .unionByName(state_at_watermark)
-        .distinct()
-        .collect()
+    state_at_watermark = {
+        r.bucket: r.run_id
+        for r in sorted(entries, key=lambda r: r.snapshot)
+        if r.snapshot <= watermark
     }
-    all_pairs = {
-        (r.bucket, r.run_id)
-        for r in m.select("bucket", "run_id").distinct().collect()
-    }
+    live = set(state_at_watermark.items())
+    live |= {(r.bucket, r.run_id) for r in entries if r.snapshot > watermark}
+    all_pairs = {(r.bucket, r.run_id) for r in entries}
     # watermark BEFORE deletion: if the process dies mid-expiry, reads below
     # the watermark fail fast ("expired") instead of silently serving a
     # partial table from half-deleted partitions

@@ -822,69 +822,6 @@ def tiff_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "webp_pixel_roundtrip",
-    """
-    SELECT doc_id,
-           CAST(8 + doc_id % 16 AS INT) AS width,
-           CAST(8 + doc_id % 8 AS INT)  AS height,
-           round(
-             list_aggregate(
-               flatten(list_transform(range(0, CAST(8 + doc_id % 8 AS INT)),
-                 y -> list_transform(range(0, CAST(8 + doc_id % 16 AS INT)),
-                   x -> CAST((x * 7 + y * 13 + doc_id) % 256 AS DOUBLE)))),
-               'avg') / 255.0, 6) AS mean_px
-    FROM documents WHERE doc_id < 200
-    """,
-)
-def webp_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WebP LOSSLESS (VP8L) roundtrip under the gate (multimodal/
-    webp_codec — RIFF container, LSB-first bitstream, code-length-coded
-    prefix trees): the same deterministic gradient as the PNG row is
-    encoded with the full entropy coder (per-channel Huffman trees, the
-    gradient guarantees >2 symbols so the SIMPLE form is never taken)
-    and decoded back; width/height/pixel-mean come from the DECODED
-    pixels and the oracle predicts them analytically. LZ77 / cache /
-    transforms on the decode side are pinned by tests/test_webp_codec.py
-    hand-assembled bitstreams."""
-    from ..multimodal.webp_codec import pixels_to_webp, webp_to_pixels
-
-    schema = T.StructType(
-        [
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("mean_px", T.DoubleType(), False),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def roundtrip(doc_id: pd.Series) -> pd.DataFrame:
-        rows = []
-        for d in doc_id:
-            d = int(d)
-            w, h = 8 + d % 16, 8 + d % 8
-            x, y = np.arange(w), np.arange(h)
-            g = ((x[None, :] * 7 + y[:, None] * 13 + d) % 256).astype(np.uint8)
-            back = webp_to_pixels(pixels_to_webp(g))
-            rows.append(
-                dict(
-                    width=int(back.shape[1]),
-                    height=int(back.shape[0]),
-                    mean_px=float(back.astype(np.float64).mean() / 255.0),
-                )
-            )
-        return pd.DataFrame(rows)
-
-    docs = tfan(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    e = roundtrip(F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        e.getField("width").alias("width"),
-        e.getField("height").alias("height"),
-        F.round(e.getField("mean_px"), 6).alias("mean_px"),
-    )
-
-
-@query(
     "jpeg_pixel_roundtrip",
     """
     SELECT doc_id,
@@ -955,70 +892,6 @@ def jpeg_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.getField("height").alias("height"),
         F.round(e.getField("mean_uniform"), 6).alias("mean_uniform"),
         e.getField("grad_close").alias("grad_close"),
-    )
-
-
-@query(
-    "gif_pixel_roundtrip",
-    """
-    SELECT doc_id,
-           CAST(6 + doc_id % 12 AS INT) AS width,
-           CAST(6 + doc_id % 6 AS INT)  AS height,
-           round(list_aggregate(
-             flatten(list_transform(range(0, CAST(6 + doc_id % 6 AS BIGINT)),
-               y -> list_transform(range(0, CAST(6 + doc_id % 12 AS BIGINT)),
-                 x -> CAST((((x * 3 + y * 7 + doc_id) % (4 + doc_id % 13))
-                            * 37 + 5) % 256 AS DOUBLE)))),
-             'avg') / 255.0, 6) AS mean_px
-    FROM documents WHERE doc_id < 200
-    """,
-)
-def gif_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF decode (pure-Python LZW codec, multimodal/gif_codec): a
-    deterministic palette-index gradient is encoded as a genuine GIF89a
-    per doc (palette size 4..16 so LZW width growth is exercised), decoded
-    back, and width/height/pixel-mean come from the DECODED RGB. GIF is
-    lossless, so the oracle predicts the mean analytically — any LZW or
-    palette defect breaks the hash match. Demoted slot: locally
-    oracle-verified; window surrogates are the PNG/JPEG roundtrips."""
-    from ..multimodal.gif_codec import gif_to_pixels, pixels_to_gif
-
-    schema = T.StructType(
-        [
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("mean_px", T.DoubleType(), False),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def roundtrip(doc_id: pd.Series) -> pd.DataFrame:
-        rows = []
-        for d in doc_id:
-            d = int(d)
-            w, h, ncol = 6 + d % 12, 6 + d % 6, 4 + d % 13
-            x, y = np.arange(w), np.arange(h)
-            idx = ((x[None, :] * 3 + y[:, None] * 7 + d) % ncol).astype(np.uint8)
-            pal = np.repeat(
-                ((np.arange(ncol) * 37 + 5) % 256)[:, None], 3, axis=1
-            ).astype(np.uint8)
-            back = gif_to_pixels(pixels_to_gif(idx, pal))
-            rows.append(
-                dict(
-                    width=int(back.shape[1]),
-                    height=int(back.shape[0]),
-                    mean_px=float(back.astype(np.float64).mean() / 255.0),
-                )
-            )
-        return pd.DataFrame(rows)
-
-    docs = tfan(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    e = roundtrip(F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        e.getField("width").alias("width"),
-        e.getField("height").alias("height"),
-        F.round(e.getField("mean_px"), 6).alias("mean_px"),
     )
 
 

@@ -87,8 +87,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load every fixture parquet under ``sf_dir`` as a DataFrame dict."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}

@@ -68,30 +68,19 @@ def test_resize_real_transcodes_all_decodable_formats():
     undecodable bytes keep the stub contract."""
     import numpy as np
 
-    from docling_japanese_books_spark.multimodal.gif_codec import pixels_to_gif
     from docling_japanese_books_spark.multimodal.media import resize_image_real
     from docling_japanese_books_spark.multimodal.png_codec import (
         PNG_SIGNATURE,
         png_to_pixels,
     )
     from docling_japanese_books_spark.multimodal.tiff_codec import pixels_to_tiff
-    from docling_japanese_books_spark.multimodal.webp_codec import pixels_to_webp
 
     x, y = np.arange(16), np.arange(12)
     gray = ((x[None, :] * 7 + y[:, None] * 13) % 256).astype(np.uint8)
     rgb = np.dstack([gray, gray[::-1], 255 - gray])
 
-    # GIF is palette-indexed: 4-color blocks image through its own writer
-    gif_pal = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [250, 250, 250]], np.uint8
-    )
-    gif_idx = (np.indices((12, 16)).sum(axis=0) % 4).astype(np.uint8)
-    gif_rgb = gif_pal[gif_idx]
-
     payloads = {
         "tiff": (pixels_to_tiff(rgb), rgb),
-        "webp": (pixels_to_webp(rgb), rgb),
-        "gif": (pixels_to_gif(gif_idx, gif_pal), gif_rgb),
     }
     for fmt, (blob, src_img) in payloads.items():
         out = resize_image_real(blob, 8, 6)
@@ -106,3 +95,39 @@ def test_resize_real_transcodes_all_decodable_formats():
 
     stub = resize_image_real(b"not an image", 8, 6)
     assert stub.startswith(b"resized:8x6:")
+
+
+def test_retired_gif_webp_take_the_per_row_failure_path(spark):
+    """GIF and WebP have no decoder: their bytes must land on each stage's
+    per-row failure outcome — null metadata, null dhash, stub resize —
+    never a task failure. The PNG row beside them still decodes, so the
+    nulls come from the format, not from a broken stage."""
+    import numpy as np
+
+    from docling_japanese_books_spark.multimodal.media import resize_images
+    from docling_japanese_books_spark.multimodal.phash import image_dhash
+    from docling_japanese_books_spark.multimodal.png_codec import pixels_to_png
+
+    filler = bytes(range(64))
+    gif = b"GIF89a" + filler
+    webp = (
+        b"RIFF" + (8 + len(filler)).to_bytes(4, "little") + b"WEBPVP8L" + filler
+    )
+    png = pixels_to_png(np.arange(48, dtype=np.uint8).reshape(6, 8))
+    df = spark.createDataFrame(
+        [(1, 0, gif), (2, 0, webp), (3, 0, png)],
+        "doc_id long, image_index int, payload binary",
+    )
+
+    meta = {
+        r.doc_id: r
+        for r in extract_image_features(df, decode_fn=decode_image_real).collect()
+    }
+    dhash = {r.doc_id: r.dhash for r in image_dhash(df).collect()}
+    resized = {r.doc_id: bytes(r.payload) for r in resize_images(df, 8, 6).collect()}
+    for d in (1, 2):
+        assert meta[d].format is None and meta[d].feature is None, d
+        assert dhash[d] is None, d
+        assert resized[d].startswith(b"resized:8x6:"), d
+    assert meta[3].format == "png" and dhash[3] is not None
+    assert resized[3].startswith(b"\x89PNG")

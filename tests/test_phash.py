@@ -42,10 +42,10 @@ def test_dhash_brightness_and_transcode_invariant():
     # global brightness shift cancels in the differences
     assert dhash64(np.clip(px.astype(np.int32) + 10, 0, 255).astype(np.uint8)) == h
     # PNG and TIFF bytes of the SAME pixels hash identically (real codecs)
-    from docling_japanese_books_spark.multimodal.phash import _decode_pixels
+    from docling_japanese_books_spark.multimodal.images import decode_pixels
 
-    assert dhash64(_decode_pixels(pixels_to_png(px))) == h
-    assert dhash64(_decode_pixels(pixels_to_tiff(px))) == h
+    assert dhash64(decode_pixels(pixels_to_png(px))[1]) == h
+    assert dhash64(decode_pixels(pixels_to_tiff(px))[1]) == h
 
 
 def test_dhash_locality_and_separation():

@@ -534,7 +534,11 @@ def test_expire_snapshots(spark, out_dir):
         versioned=True, reprocess=[0],
     )
 
-    deleted = expire_snapshots(spark, out_dir, keep_last=2)
+    deleted, jobs = _jobs_in_group(
+        spark, "expire_jobs", lambda: expire_snapshots(spark, out_dir, keep_last=2)
+    )
+    # the manifest is read on the driver: expiry runs no Spark job
+    assert len(jobs) == 0, f"expire_snapshots ran {len(jobs)} jobs"
     # kept snapshots {2,3}: at the watermark (2) buckets 0,1 are owned by
     # s2 and buckets 2,3 by s1 — so s1's bucket-0 and bucket-1 partitions
     # are dead (2 deletions), while s1's buckets 2,3 stay carried forward

@@ -145,3 +145,70 @@ def test_demoted_surrogates_are_green_in_latest_correctness():
         f"demoted queries whose surrogates are not green in {files[-1].name}: "
         f"{problems}"
     )
+
+
+def _package_imports(path, modname, is_pkg, pkg):
+    """Dotted names of in-package modules a file imports anywhere in its
+    body (module level or function-local, absolute or relative). A
+    ``from X import y`` yields ``X.y`` too; the caller keeps it only if
+    it names a real module rather than an attribute."""
+    import ast
+
+    base = modname.split(".") if is_pkg else modname.split(".")[:-1]
+    out = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                parts = base[: len(base) - (node.level - 1)]
+                mod = ".".join(parts + ([node.module] if node.module else []))
+            else:
+                mod = node.module or ""
+            out.add(mod)
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    return {m for m in out if m == pkg or m.startswith(pkg + ".")}
+
+
+def test_every_package_module_is_reachable_from_a_root():
+    """Code that nothing calls is deleted: every package module must be
+    imported, transitively, from the query registry, the pipeline driver,
+    the CLI, the driver contract (``__spark_entry__.py``) or perfbench.
+    Walks the import graph with ``ast`` (no imports executed); importing
+    a module also runs every enclosing package ``__init__.py``."""
+    from pathlib import Path
+
+    repo = Path(entry.__file__).parent
+    pkg = "docling_japanese_books_spark"
+    files = {}  # dotted module name -> (path, is_package)
+    for p in (repo / pkg).rglob("*.py"):
+        parts = list(p.relative_to(repo).with_suffix("").parts)
+        is_pkg = parts[-1] == "__init__"
+        files[".".join(parts[:-1] if is_pkg else parts)] = (p, is_pkg)
+
+    roots = [
+        (repo / "__spark_entry__.py", "__spark_entry__"),
+        *((p, f"perfbench.{p.stem}") for p in sorted((repo / "perfbench").glob("*.py"))),
+    ]
+    todo = [f"{pkg}.queries", f"{pkg}.pipeline.driver", f"{pkg}.__main__"]
+    for path, name in roots:
+        todo += _package_imports(path, name, False, pkg)
+    seen = set()
+    while todo:
+        mod = todo.pop()
+        if mod in seen or mod not in files:
+            continue
+        seen.add(mod)
+        # an import runs the enclosing packages' __init__ first
+        parent = mod.rpartition(".")[0]
+        if parent:
+            todo.append(parent)
+        path, is_pkg = files[mod]
+        todo += _package_imports(path, mod, is_pkg, pkg)
+
+    unreached = sorted(
+        str(path.relative_to(repo / pkg))
+        for mod, (path, is_pkg) in files.items()
+        if not is_pkg and mod not in seen
+    )
+    assert not unreached, f"modules no root reaches: {unreached}"
