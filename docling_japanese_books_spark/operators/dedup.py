@@ -173,7 +173,6 @@ def minhash_lsh_candidates(
     shingle_n: int = 4,
     seed: int = 42,
     threshold: float = 0.5,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via banded LSH.
 
@@ -187,14 +186,14 @@ def minhash_lsh_candidates(
     distinct pairs -> signature-overlap filter. Output:
     (id_a, id_b, est_jaccard) with id_a < id_b.
 
-    ``checkpoint=True`` materializes the signature frame with
-    ``localCheckpoint`` instead of ``persist``: at 100 TB the signatures
-    don't fit in executor storage memory, and a cache miss would recompute
-    the signature UDF over the full corpus for BOTH consumers (band explode
-    and pair verify). Checkpointing truncates lineage so the UDF provably
-    runs once; on a real cluster swap in ``df.checkpoint()`` with a
-    reliable checkpoint dir, or write the signatures to a table. Default
-    off: locally the cache always fits and persist is cheaper.
+    The signature frame feeds both the band explode and the pair verify,
+    so it is materialized with a lazy ``localCheckpoint``: the first job
+    over the returned plan runs the signature UDF once per document and
+    both consumers read its blocks. The checkpoint belongs to this plan
+    only; it is not a session cache, so a rebuilt plan recomputes the
+    signatures. Local checkpoints are not fault-tolerant: on a real
+    cluster swap in ``df.checkpoint()`` with a reliable checkpoint dir,
+    or write the signatures to a table.
     """
     rows_per_band = m // bands
     sigs = df.select(
@@ -203,7 +202,7 @@ def minhash_lsh_candidates(
     )
     # the signature frame feeds the band explode AND the pair verify step:
     # materialize so the UDF runs once per document
-    sigs = sigs.localCheckpoint(eager=True) if checkpoint else sigs.persist()
+    sigs = sigs.localCheckpoint(eager=False)
     # the banded self-join carries BARE (id, band, bhash) keys only — at
     # bands=8 the exploded frame is 8 rows/doc, and shipping the m-long
     # signature on both sides would push ~16x the signature bytes through
@@ -765,7 +764,6 @@ def duplicate_substring_spans(
     text_col: str = "text",
     prefilter: bool = True,
     chunk: int = 65536,
-    checkpoint: bool = False,
     adaptive_fallback: "float | None" = None,
     stats_out: "dict | None" = None,
 ) -> DataFrame:
@@ -826,13 +824,11 @@ def duplicate_substring_spans(
        (ReusedExchange, plan-test-pinned); with the prefilter on, the
        PythonUDF in the lineage defeats canonical equality of the
        OUTER pair, so the anchor pass and candidate-bounded gram map
-       run twice (trace-hook-verified 2×, down from 4× with a
-       groupBy-min + join-back shape) — a constant factor, not a
-       scale cliff; every stage stays skew-splittable and
-       memory-bounded. ``checkpoint=True`` removes even that factor by
-       localCheckpoint-ing the tiny merged-ranges frame (anchor pass
-       runs exactly once — trace-hook-verified 1×; same
-       fault-tolerance trade as minhash's checkpoint mode).
+       would run twice. The tiny merged-ranges frame is therefore
+       local-checkpointed, so the anchor pass runs exactly once
+       (trace-hook-verified 1×; same fault-tolerance trade as the
+       minhash signature checkpoint); every stage stays
+       skew-splittable and memory-bounded.
     4. **Chunked gram emission**: windows are hashed per ``chunk``-sized
        slice of each candidate range, so the transient per-row state
        (Arrow cell + zipped array) is <= ~16·chunk bytes — a 10 MB
@@ -852,8 +848,7 @@ def duplicate_substring_spans(
     candidate ranges cover everything; natural-language corpora can
     also erode selectivity, since common 8-grams that hash low become
     corpus-wide anchor hits). When set (e.g. 0.5), the merged candidate
-    ranges are materialized (eager localCheckpoint — same
-    fault-tolerance trade as ``checkpoint``), their window coverage is
+    ranges' checkpoint is taken eagerly, their window coverage is
     measured with one cheap aggregate, and if candidates cover more
     than that fraction of all corpus windows the operator falls back to
     the bare gram path — paying only the already-spent anchor pass.
@@ -903,19 +898,17 @@ def duplicate_substring_spans(
             ),
             id_col,
         )
-        if checkpoint or adaptive_fallback is not None:
-            # The gram self-join's two sides each re-evaluate their whole
-            # lineage (the PythonUDF defeats canonical exchange equality
-            # for the OUTER pair), so the anchor pass would run twice.
-            # localCheckpoint on the TINY merged-ranges frame truncates
-            # the lineage there: anchors run exactly once, both gram
-            # sides re-read candidate ranges from executor storage. Same
-            # trade as minhash_lsh_candidates(checkpoint=True): local
-            # checkpoints are not fault-tolerant — on a real cluster use
-            # df.checkpoint() with a reliable dir or a table write.
-            # The adaptive measurement is an action over the ranges, so
-            # it forces the checkpoint eagerly in that mode.
-            ranges = ranges.localCheckpoint(eager=adaptive_fallback is not None)
+        # The gram self-join's two sides each re-evaluate their whole
+        # lineage (the PythonUDF defeats canonical exchange equality for
+        # the OUTER pair), so the anchor pass would run twice.
+        # localCheckpoint on the TINY merged-ranges frame truncates the
+        # lineage there: anchors run exactly once, both gram sides re-read
+        # candidate ranges from executor storage. Same trade as the
+        # minhash signature checkpoint: local checkpoints are not
+        # fault-tolerant — on a real cluster use df.checkpoint() with a
+        # reliable dir or a table write. The adaptive measurement is an
+        # action over the ranges, so it takes the checkpoint eagerly.
+        ranges = ranges.localCheckpoint(eager=adaptive_fallback is not None)
         if adaptive_fallback is not None:
             lens = docs.select(id_col, F.length(text_col).alias("_len"))
             cand = (
@@ -1081,7 +1074,6 @@ def dedup_exact_substrings(
     text_col: str = "text",
     prefilter: bool = True,
     chunk: int = 65536,
-    checkpoint: bool = False,
     adaptive_fallback: "float | None" = None,
     stats_out: "dict | None" = None,
 ) -> DataFrame:
@@ -1098,7 +1090,7 @@ def dedup_exact_substrings(
     from pyspark.sql import types as T
 
     spans = duplicate_substring_spans(
-        docs, min_len, id_col, text_col, prefilter, chunk, checkpoint,
+        docs, min_len, id_col, text_col, prefilter, chunk,
         adaptive_fallback, stats_out,
     )
     per_doc = spans.groupBy(id_col).agg(

@@ -104,7 +104,6 @@ def host_pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     checkpoint_every: int = 0,
-    persist_edges: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over a ``host_link_edges`` edge list — the
     host-rank signal Common Crawl publishes with its web graph, used for
@@ -121,9 +120,8 @@ def host_pagerank(
     Spark-first scale shape: each iteration is ONE shuffle (the
     contribution groupBy on dst) plus two scalar aggregates; the rank
     vector is |hosts| rows (~1e8 for the full web — a few GB, fine to
-    shuffle, never collected); edges are re-read per iteration, so
-    callers should persist the (already aggregated) edge list before
-    iterating. Fixed iteration count keeps the operator deterministic
+    shuffle, never collected); edges are re-read per iteration. Fixed
+    iteration count keeps the operator deterministic
     and oracle-expressible; production crawl ranking runs a fixed small
     number of iterations anyway (convergence beyond ~10 moves ordering
     little).
@@ -132,20 +130,18 @@ def host_pagerank(
     eager ``localCheckpoint`` every k iterations: the iterative plan
     otherwise grows linearly (each round nests the last), and past ~6
     rounds analysis time dominates. Same caveat as the dedup/semdedup
-    checkpoint modes — localCheckpoint pins executor blocks, so on a
+    checkpoints — localCheckpoint pins executor blocks, so on a
     preemptible cluster substitute a table write; values are unchanged
     either way (pinned by test).
 
-    ``persist_edges`` (default on) caches the edge frame before
-    iterating: it appears in every iteration's contribution join AND in
-    the node/out-degree seeds, so an unpersisted lineage re-derives the
+    The edge frame is local-checkpointed lazily before iterating: it
+    appears in every iteration's contribution join AND in the
+    node/out-degree seeds, so a bare lineage would re-derive the
     upstream edge build once per appearance. It is the |distinct host
     pairs| aggregate — orders of magnitude below raw link volume — so
-    caching it is cheap even at full-web scale; pass False when the
-    caller already persisted (curate-style) or wrote it to a table.
+    materializing it is cheap even at full-web scale.
     """
-    if persist_edges:
-        edges = edges.persist()
+    edges = edges.localCheckpoint(eager=False)
     out_w = edges.groupBy(F.col("src_host").alias("host")).agg(
         F.sum("n_links").cast("double").alias("_out")
     )
@@ -283,7 +279,6 @@ def host_hits(
     edges: DataFrame,
     iterations: int = 3,
     checkpoint_every: int = 1,
-    persist_edges: bool = True,
 ) -> DataFrame:
     """Kleinberg HITS over a ``host_link_edges`` edge list: ``(host,
     hub, authority)`` after ``iterations`` synchronous update rounds —
@@ -303,8 +298,8 @@ def host_hits(
     Scale shape mirrors ``host_pagerank``: the score vector is |hosts|
     rows and never collected; each sweep is ONE shuffle (the groupBy on
     the updated side) plus a broadcast scalar total; edges appear in
-    every sweep, so they persist by default (pass ``persist_edges=False``
-    when the caller already did).
+    every sweep, so they are local-checkpointed lazily, as in
+    ``host_pagerank``.
 
     ``checkpoint_every`` truncates the iterative lineage as in
     ``host_pagerank`` — but here it DEFAULTS ON (every iteration),
@@ -316,8 +311,7 @@ def host_hits(
     (test-pinned); ``checkpoint_every=0`` restores the pure-lazy plan,
     and the localCheckpoint caveat on preemptible clusters applies.
     """
-    if persist_edges:
-        edges = edges.persist()
+    edges = edges.localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col("src_host").alias("host"))
         .union(edges.select(F.col("dst_host").alias("host")))

@@ -111,7 +111,6 @@ def semdedup(
     tau: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Semantic dedup verdict per input row: (id_col, cluster_id, kept).
 
@@ -124,14 +123,14 @@ def semdedup(
     AQE-splittable SMJ, never a cartesian — plan-pinned), and the
     LeftSemi probe early-exits per row at the FIRST matching smaller-id
     neighbor, so dense duplicate clusters get cheaper, not quadratic.
-    ``checkpoint=True`` materializes the assignment once
-    (localCheckpoint — same non-fault-tolerant trade as the other dedup
-    operators' checkpoint modes; use df.checkpoint() on a reliable dir
-    on a real cluster): the assignment lineage otherwise evaluates once
-    per plan branch (both semi-join sides + the verdict frame)."""
-    assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-    if checkpoint:
-        assigned = assigned.localCheckpoint(eager=False)
+    The assignment is materialized once with a lazy localCheckpoint: its
+    lineage would otherwise evaluate once per plan branch (both
+    semi-join sides + the verdict frame). Same non-fault-tolerant trade
+    as the other dedup operators' checkpoints; use df.checkpoint() on a
+    reliable dir on a real cluster."""
+    assigned = assign_clusters(corpus, centroids, id_col, vec_col).localCheckpoint(
+        eager=False
+    )
     a = assigned.alias("a")
     b = assigned.alias("b")
     dropped = (

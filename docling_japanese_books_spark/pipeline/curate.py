@@ -17,7 +17,7 @@ raw extracted pages into an LLM-training-ready corpus.
          drop cosine->=tau neighbors of a smaller url)
       -> optional ExactSubstr cut (Lee et al. window rule: duplicated
          >=min_len-char spans removed, first corpus occurrence survives;
-         adaptive prefilter + single anchor pass via checkpoint)
+         adaptive prefilter + single anchor pass via a local checkpoint)
       -> optional DSIR selection (operators/dsir.py: Gumbel-top-k over
          importance log-weights toward a target corpus — last, so it
          selects from clean, deduped text)
@@ -90,12 +90,16 @@ def curate_corpus(
     """Returns (curated corpus, survival report). Deterministic: survivors
     of each dedup stage are the minimum-url member of every duplicate set.
 
-    Single-pass discipline: the normalize/quality UDF stage is persisted, so
-    it executes exactly ONCE no matter how many report counts and dedup
-    stages read it (an uncached lineage would rerun the Python UDFs per
-    action — the scale-killer at 100 TB). The returned frame is persisted
-    and already materialized, so writing it does not recompute the pipeline.
-    At cluster scale, substitute a checkpoint/table write for .persist()."""
+    Single-pass discipline: the normalize/quality UDF stage is
+    local-checkpointed, so it executes exactly ONCE no matter how many
+    report counts and dedup stages read it (a bare lineage would rerun the
+    Python UDFs per action — the scale-killer at 100 TB). The returned
+    frame is local-checkpointed and already materialized by the stage
+    counts, so writing it does not recompute the pipeline. Every
+    checkpoint belongs to the returned plan, not to the session: the call
+    leaves no cache for the caller, or an error path, to release. Local
+    checkpoints are not fault-tolerant; at cluster scale, substitute a
+    reliable checkpoint or a table write."""
     # optional stage 0 — the URL gate. Pure column algebra + broadcast
     # blocklist joins over the RAW input, ahead of every Python stage:
     # a page a nanosecond URL check kills must never pay the normalize
@@ -132,7 +136,7 @@ def curate_corpus(
         )
     normalized = extracted.withColumn(text_col, normalize_cjk_udf(F.col(text_col)))
     # optional C4 cleaning (operators/c4.py): pure column algebra over the
-    # normalized text, so it folds into the same persisted stage — text is
+    # normalized text, so it folds into the same checkpointed stage — text is
     # rewritten to the retained lines for pages that pass, downstream
     # scores see the CLEANED text, and the page verdict joins the gate
     c4_col = None
@@ -168,16 +172,17 @@ def curate_corpus(
         )
     # the repetition half of the published Gopher filter (dup lines/
     # paragraphs, top/dup n-gram char fractions) — a pandas UDF, but it
-    # rides the same persisted gate stage, so still one corpus pass
+    # rides the same checkpointed gate stage, so still one corpus pass
     if gopher_repetition:
         from ..operators.textstats import gopher_repetition_rules
 
         full_gate = full_gate & gopher_repetition_rules(
             F.col(text_col)
         ).getField("rep_passes")
-    scored = scored.persist()
+    scored = scored.localCheckpoint(eager=False)
 
-    # rows_in + quality survivors in ONE aggregate over the cached stage
+    # rows_in + quality survivors in ONE aggregate; it materializes the
+    # checkpointed stage
     head = scored.agg(
         F.count("*").alias("rows_in"),
         F.coalesce(F.sum(gate.cast("long")), F.lit(0)).alias("rows_quality"),
@@ -193,11 +198,10 @@ def curate_corpus(
 
     # optional learned-quality gate (quality_clf): train self-supervised
     # on a bounded hash-ordered sample of the heuristic survivors (reads
-    # the cache), then score every survivor in one Arrow stage. Persisted
-    # so the scoring UDF — like the normalize UDF — runs once across the
-    # dedup counts and the final write.
+    # the checkpoint), then score every survivor in one Arrow stage.
+    # Checkpointed so the scoring UDF — like the normalize UDF — runs once
+    # across the dedup counts and the final write.
     rows_model = None
-    model_scored = None
     if model_quality_min is not None:
         from ..operators.quality_clf import quality_score_udf, self_supervised_model
 
@@ -206,17 +210,18 @@ def curate_corpus(
             gated, text_col=text_col, sample_size=model_sample_size,
             dim=dim, id_col=url_col,
         )
-        model_scored = gated.withColumn(
+        gated = gated.withColumn(
             "model_quality", quality_score_udf(w, b, dim)(F.col(text_col))
-        ).filter(F.col("model_quality") >= model_quality_min).persist()
-        rows_model = model_scored.count()
-        gated = model_scored
+        ).filter(F.col("model_quality") >= model_quality_min).localCheckpoint(
+            eager=False
+        )
+        rows_model = gated.count()
 
     # exact dedup: hash in the projection, min(url) per hash survives
     hashed = gated.withColumn("_h", F.sha2(F.col(text_col), 256))
     keepers = hashed.groupBy("_h").agg(F.min(url_col).alias(url_col))
     exact = hashed.join(keepers, [url_col], "left_semi").drop("_h")
-    rows_exact = exact.count()  # reads the cache, no UDF recompute
+    rows_exact = exact.count()  # reads the checkpoint, no UDF recompute
 
     # near-dup: LSH candidate pairs above threshold; drop the larger url of
     # each pair (transitive chains collapse to the smallest member greedily)
@@ -224,7 +229,9 @@ def curate_corpus(
         exact, text_col=text_col, id_col=url_col, threshold=near_dup_threshold
     )
     losers = pairs.select(F.col("id_b").alias(url_col)).distinct()
-    curated = exact.join(losers, [url_col], "left_anti").persist()
+    curated = exact.join(losers, [url_col], "left_anti").localCheckpoint(
+        eager=False
+    )
     rows_near = curated.count()  # materializes the returned frame
 
     # optional semantic dedup (SemDeDup, Abbas et al. 2023): embed the
@@ -232,8 +239,8 @@ def curate_corpus(
     # deterministic centroids (k smallest urls), and drop every document
     # with a smaller-url same-cluster neighbor at cosine >= semantic_tau —
     # catches templated rewrites / paraphrases that shingle-level MinHash
-    # misses. The embedding frame is persisted because semdedup's
-    # within-cluster self-join reads it from three plan branches.
+    # misses. The embedding frame is checkpointed because the centroid
+    # pick and semdedup's assignment both read it.
     rows_sem = None
     if semantic_tau is not None:
         from ..operators.embedding import embed_udf
@@ -241,28 +248,22 @@ def curate_corpus(
 
         emb = curated.select(
             F.col(url_col), embed_udf()(F.col(text_col)).alias("_emb")
-        ).persist()
+        ).localCheckpoint(eager=False)
         cents = first_k_centroids(
             emb, semantic_clusters, id_col=url_col, vec_col="_emb"
         )
-        # checkpoint=True: the assignment (and the embed UDF feeding it)
-        # evaluates once, not once per semi-join branch
         verdicts = semdedup(
-            emb, cents, tau=semantic_tau, id_col=url_col, vec_col="_emb",
-            checkpoint=True,
+            emb, cents, tau=semantic_tau, id_col=url_col, vec_col="_emb"
         )
-        sem = curated.join(
+        curated = curated.join(
             verdicts.filter(F.col("kept")).select(url_col), [url_col], "left_semi"
-        ).persist()
-        rows_sem = sem.count()
-        curated.unpersist()
-        emb.unpersist()
-        curated = sem
+        ).localCheckpoint(eager=False)
+        rows_sem = curated.count()
 
     # optional ExactSubstr cut (Lee et al. 2021 window rule): duplicated
     # >=substring_min_len-char spans are removed corpus-wide, first
     # occurrence (lowest url, position) surviving intact; rows whose text
-    # is entirely boilerplate drop out. Reads the persisted near-dup
+    # is entirely boilerplate drop out. Reads the checkpointed near-dup
     # survivors, so the gram/anchor stages never recompute the UDF chain.
     rows_cut = None
     chars_removed = None
@@ -273,36 +274,29 @@ def curate_corpus(
         chars_before = curated.agg(
             F.coalesce(F.sum(F.length(text_col)), F.lit(0))
         ).collect()[0][0]
-        # checkpoint=True: the anchor corpus pass runs exactly ONCE (the
-        # gram self-join would otherwise re-evaluate it per side —
-        # VERDICT r6 #2); adaptive_fallback switches to the bare gram
-        # path when anchors mark most of the corpus as candidate
-        # (prefilter overhead exceeds its savings past ~50% coverage).
-        # localCheckpoint caveat: not fault-tolerant — on a real cluster
-        # swap for df.checkpoint() on a reliable dir (see dedup.py).
+        # adaptive_fallback switches to the bare gram path when anchors
+        # mark most of the corpus as candidate (prefilter overhead exceeds
+        # its savings past ~50% coverage)
         cut = dedup_exact_substrings(
             curated,
             min_len=substring_min_len,
             id_col=url_col,
             text_col=text_col,
-            checkpoint=True,
             adaptive_fallback=substring_adaptive,
             stats_out=substr_stats,
         )
-        final = (
+        curated = (
             curated.drop(text_col)
             .join(cut, url_col)
             .filter(F.length(text_col) > 0)
-            .persist()
+            .localCheckpoint(eager=False)
         )
-        stats = final.agg(
+        stats = curated.agg(
             F.count("*").alias("n"),
             F.coalesce(F.sum(F.length(text_col)), F.lit(0)).alias("chars"),
         ).collect()[0]
         rows_cut = int(stats.n)
         chars_removed = int(chars_before) - int(stats.chars)
-        curated.unpersist()
-        curated = final
 
     # optional DSIR selection (Xie et al. 2023): keep the dsir_keep
     # survivors whose hashed-n-gram distribution looks most like the
@@ -332,14 +326,8 @@ def curate_corpus(
         picked = dsir_select(
             scored_w, dsir_keep, id_col=url_col
         ).select(url_col, "log_weight")
-        sel = curated.join(picked, url_col).persist()
-        rows_dsir = sel.count()
-        curated.unpersist()
-        curated = sel
-
-    scored.unpersist()  # curated is materialized; upstream caches can go
-    if model_scored is not None:
-        model_scored.unpersist()
+        curated = curated.join(picked, url_col).localCheckpoint(eager=False)
+        rows_dsir = curated.count()
 
     report = CurationReport(
         # with the URL gate on, rows_in is the PRE-gate count (the head

@@ -46,8 +46,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computes every MinHash in two tasks (12.9 s -> 3.1 s for the
     # signature pass at sf1.0); downstream banded joins are unchanged.
     docs = fan(
-        spark, _with_planted_near_dups(t(spark, sf_dir, "documents")),
-        sf_dir, "documents", "doc_id", width=8,
+        _with_planted_near_dups(t(spark, sf_dir, "documents")), "doc_id", width=8
     )
     return minhash_lsh_candidates(docs, threshold=0.5).select(
         "id_a", "id_b", r6(F.col("est_jaccard")).alias("est_jaccard")
@@ -58,8 +57,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (hamming <= 3) over documents + planted dups."""
     docs = fan(
-        spark, _with_planted_near_dups(t(spark, sf_dir, "documents")),
-        sf_dir, "documents", "doc_id", width=8,
+        _with_planted_near_dups(t(spark, sf_dir, "documents")), "doc_id", width=8
     )
     return simhash_near_dups(docs, max_hamming=3)
 
@@ -645,7 +643,7 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch shape pinned by tests/test_fingerprint_media.py."""
     from ..multimodal.media import sample_frames
 
-    docs = fan(spark, t(spark, sf_dir, "documents").limit(200), sf_dir, "documents")
+    docs = fan(t(spark, sf_dir, "documents").limit(200))
     media = docs.select(
         "doc_id",
         F.lit(0).alias("media_index"),
@@ -669,7 +667,7 @@ def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting). Rows-only."""
     from ..multimodal.media import resize_images
 
-    docs = fan(spark, t(spark, sf_dir, "documents").limit(200), sf_dir, "documents")
+    docs = fan(t(spark, sf_dir, "documents").limit(200))
     images = docs.select(
         "doc_id",
         F.lit(0).alias("image_index"),

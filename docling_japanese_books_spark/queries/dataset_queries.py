@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import hash_split, pack_sequences, stratified_sample
-from .relational import fan, query, r6, t, tfan
+from .relational import query, r6, t, tfan
 
 _B = "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000000"
 

@@ -157,7 +157,7 @@ def pdf_vertical_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pdf_layout_vertical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vertical-text reading order over synthesized two-column pages
     (rows-only; column semantics pinned by tests/test_pdf_layout.py)."""
-    docs = fan(spark, t(spark, sf_dir, "documents").limit(100), sf_dir, "documents")
+    docs = fan(t(spark, sf_dir, "documents").limit(100))
     # two vertical columns: first half of words in the right column (x=500),
     # second half in the left column (x=100) — reading order = original order
     words = F.split(F.col("text"), " ")

@@ -16,8 +16,6 @@ shuffles, what broadcasts.
 
 from __future__ import annotations
 
-import os
-from pathlib import Path
 from typing import Callable, Dict, NamedTuple, Optional
 from weakref import WeakKeyDictionary
 
@@ -66,32 +64,23 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Fan-out ceiling: above this on-disk size the file splitter already hands
-# every core a split (and a fan shuffle would move real bytes), so tfan()
-# degrades to t(). Parameterized so a cluster job can lower/raise it; the
-# local default (1 GiB) is also a sane cluster value — a sub-GiB table is
-# always cheap to reshuffle once before CPU-dense work.
-_FAN_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_MAX_BYTES", str(1 << 30)))
-
-
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk footprint of a fixture table; -1 when unknowable cheaply
-    (non-local path) — callers then assume 'big' and skip the fan."""
-    p = Path(sf_dir) / f"{name}.parquet"
-    try:
-        if p.is_file():
-            return p.stat().st_size
-        if p.is_dir():
-            return sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-    except OSError:
-        pass
-    return -1
+# Fan-out ceiling: above this estimated size the file splitter already
+# hands every core a split (and a fan shuffle would move real bytes), so
+# fan() leaves the frame as it is. A sub-GiB frame is always cheap to
+# reshuffle once before CPU-dense work, locally or on a cluster. A source
+# without size statistics estimates as Long.MaxValue, so it is never fanned.
+_FAN_MAX_BYTES = 1 << 30
 
 
 def tfan(spark: SparkSession, sf_dir: str, name: str, *part_cols: str) -> DataFrame:
-    """``t()`` plus a scale-adaptive fan-out for CPU-dense per-row work
-    (guide §2.5 input skew: 'one huge unsplittable file ... repartition
-    immediately after the read').
+    """``fan(t(spark, sf_dir, name), *part_cols)``: a table scan fanned out
+    for CPU-dense per-row work (guide §2.5 input skew: 'one huge
+    unsplittable file ... repartition immediately after the read')."""
+    return fan(t(spark, sf_dir, name), *part_cols)
+
+
+def fan(df: DataFrame, *part_cols: str, width: int | None = None) -> DataFrame:
+    """Scale-adaptive fan-out ahead of CPU-dense per-row work.
 
     Small single-file parquet tables carry one row group, so the byte-range
     splitter cannot parallelize the scan: every regexp/Arrow-UDF projection
@@ -100,39 +89,26 @@ def tfan(spark: SparkSession, sf_dir: str, name: str, *part_cols: str) -> DataFr
     ``defaultParallelism`` — by ``part_cols`` when given (a hash exchange:
     deterministic under task retry, no sortBeforeRepartition pass, and
     reusable by a downstream shuffle on the same key), else by the first
-    column (the tables' unique id, so the hash spreads evenly).
+    column (the tables' unique id, so the hash spreads evenly). Applied to
+    a frame DERIVED from a table (union with planted rows, pre-wrapped
+    projections, ...), a multi-branch plan gets ONE exchange instead of
+    one per branch.
 
-    Scale-adaptive: tables above SPARK_GRAFT_FAN_MAX_BYTES (or of
-    unknowable size, e.g. object-store paths) are returned unfanned — at
-    real corpus sizes the scan itself yields a split per core and the
-    extra shuffle would cost more than it buys.
-    """
-    return fan(spark, t(spark, sf_dir, name), sf_dir, name, *part_cols)
-
-
-def fan(
-    spark: SparkSession,
-    df: DataFrame,
-    sf_dir: str,
-    name: str,
-    *part_cols: str,
-    width: int | None = None,
-) -> DataFrame:
-    """Fan-out for a frame DERIVED from table ``name`` (union with planted
-    rows, pre-wrapped projections, ...): same guard and partitioning rules
-    as ``tfan`` but applied after the derivation, so a multi-branch plan
-    gets ONE exchange instead of one per branch.
+    Scale-adaptive: the decision reads Spark's own size estimate of the
+    optimized plan. Frames above ``_FAN_MAX_BYTES``, or of unknown size,
+    are returned unfanned — at real corpus sizes the scan itself yields a
+    split per core and the extra shuffle would cost more than it buys.
 
     ``width`` caps the fan below defaultParallelism — for operators that
-    persist the fanned frame and re-read it in several small downstream
-    stages (MinHash/SimHash), where per-task overhead on a many-partition
-    cached frame costs more than the extra UDF parallelism buys (measured
-    sf1.0 cold/warm: unfanned 12.0/1.1 s, width 8 -> 2.9/1.1 s, width 32
-    -> 4.6/1.5 s)."""
-    nbytes = _table_bytes(sf_dir, name)
-    if 0 <= nbytes <= _FAN_MAX_BYTES:
+    materialize the fanned frame and re-read it in several small
+    downstream stages (MinHash/SimHash), where per-task overhead on a
+    many-partition frame costs more than the extra UDF parallelism buys
+    (measured sf1.0 cold/warm: unfanned 12.0/1.1 s, width 8 -> 2.9/1.1 s,
+    width 32 -> 4.6/1.5 s)."""
+    nbytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if nbytes <= _FAN_MAX_BYTES:
         cols = list(part_cols) or [df.columns[0]]
-        n = min(width or 1 << 30, spark.sparkContext.defaultParallelism)
+        n = min(width or 1 << 30, df.sparkSession.sparkContext.defaultParallelism)
         df = df.repartition(n, *[F.col(c) for c in cols])
     return df
 

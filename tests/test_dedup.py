@@ -85,19 +85,35 @@ def test_signature_similarity_aggregate_parity(spark):
 
 
 def test_minhash_checkpoint_mode_same_pairs(spark, docs):
-    """checkpoint=True (the 100 TB path: localCheckpoint instead of persist)
-    must produce exactly the same pairs, and the plan downstream of the
-    checkpoint must not re-run the signature UDF (no Python eval above it)."""
-    base = {
-        (r.id_a, r.id_b, round(r.est_jaccard, 9))
-        for r in minhash_lsh_candidates(docs, threshold=0.5).collect()
+    """The signature frame is local-checkpointed on the default path: the
+    pairs must equal a brute-force banding of the same signatures, and the
+    plan downstream of the checkpoint must not re-run the signature UDF
+    (no Python eval above it)."""
+    from docling_japanese_books_spark.operators.dedup import minhash_signature_udf
+
+    sigs = {
+        r.doc_id: list(r.sig)
+        for r in docs.select(
+            "doc_id", minhash_signature_udf(64, 4, 42)(F.col("text")).alias("sig")
+        ).collect()
     }
-    ck_df = minhash_lsh_candidates(docs, threshold=0.5, checkpoint=True)
-    ck = {(r.id_a, r.id_b, round(r.est_jaccard, 9)) for r in ck_df.collect()}
-    assert ck == base
+    rows = 64 // 8
+    expected = set()
+    for a in sigs:
+        for b in sigs:
+            band_hit = any(
+                sigs[a][i * rows : (i + 1) * rows] == sigs[b][i * rows : (i + 1) * rows]
+                for i in range(8)
+            )
+            est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / 64
+            if a < b and band_hit and est >= 0.5:
+                expected.add((a, b, round(est, 9)))
+    df = minhash_lsh_candidates(docs, threshold=0.5)
+    got = {(r.id_a, r.id_b, round(r.est_jaccard, 9)) for r in df.collect()}
+    assert got == expected
     # lineage is truncated at the checkpoint: the signature UDF appears in
     # no downstream stage
-    plan = ck_df._jdf.queryExecution().executedPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
@@ -536,12 +552,14 @@ def test_exact_substring_spans_match_bruteforce_reference(spark):
 
 
 def test_exact_substring_checkpoint_single_anchor_pass(tmp_path):
-    """checkpoint=True must cut the gram self-join's recompute diamond:
-    the anchor UDF runs over the corpus EXACTLY once (vs 2x without —
-    the PythonUDF defeats canonical exchange equality for the outer
-    pair). Verified through the worker-side trace hook, which needs the
-    env var present at session start — hence a subprocess with its own
-    SparkSession. Spans must be byte-identical to the default path."""
+    """The merged-ranges checkpoint must cut the gram self-join's
+    recompute diamond: on the default path the anchor UDF runs over the
+    corpus EXACTLY once (2x without it — the PythonUDF defeats canonical
+    exchange equality for the outer pair). Verified through the
+    worker-side trace hook, which needs the env var present at session
+    start — hence a subprocess with its own SparkSession. Spans must be
+    byte-identical to the bare (prefilter=False) path, which runs no
+    anchor UDF."""
     import json
     import subprocess
     import sys
@@ -557,9 +575,9 @@ spark = get_spark("ckpt", cores=2, shuffle_partitions=4)
 spark.sparkContext.setLogLevel("ERROR")
 rows = [(i, "unique filler %06d. " % i + "<<the-shared-banner-that-makes-everyone-a-candidate!>>") for i in range(40)]
 docs = spark.createDataFrame(rows, "doc_id long, text string")
-base = sorted((r.doc_id, r.span_start, r.span_end) for r in duplicate_substring_spans(docs, min_len=40).collect())
+base = sorted((r.doc_id, r.span_start, r.span_end) for r in duplicate_substring_spans(docs, min_len=40, prefilter=False).collect())
 open({repr(str(trace))}, "w").close()
-ck = sorted((r.doc_id, r.span_start, r.span_end) for r in duplicate_substring_spans(docs, min_len=40, checkpoint=True).collect())
+ck = sorted((r.doc_id, r.span_start, r.span_end) for r in duplicate_substring_spans(docs, min_len=40).collect())
 n_calls = sum(1 for _ in open({repr(str(trace))}))
 print("RESULT " + json.dumps({{"equal": base == ck, "n_spans": len(ck), "anchor_calls": n_calls, "n_docs": 40}}))
 """

@@ -27,6 +27,23 @@ def test_q1_filter_pushdown(plans):
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in p
 
 
+def test_filter_sits_below_the_fan(spark):
+    """A filter on a fanned scan needs no hand-placed "filter-then-fan":
+    Catalyst pushes it below the fan Exchange and into the parquet scan,
+    so the fan shuffles only surviving rows."""
+    from pyspark.sql import functions as F
+
+    from docling_japanese_books_spark.queries.relational import tfan
+
+    df = tfan(spark, SF, "documents").filter(F.col("doc_id") < 100)
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln)
+    filt = next(i for i, ln in enumerate(lines) if "Filter" in ln)
+    scan = next(i for i, ln in enumerate(lines) if "FileScan parquet" in ln)
+    assert exchange < filt < scan, lines
+    assert "LessThan(doc_id,100)]" in lines[scan], lines[scan]
+
+
 def test_q3_broadcasts_never_sortmerge(plans):
     p = plans("q3_shipping_priority")
     assert "BroadcastHashJoin" in p

@@ -212,3 +212,60 @@ def test_every_package_module_is_reachable_from_a_root():
         if not is_pkg and mod not in seen
     )
     assert not unreached, f"modules no root reaches: {unreached}"
+
+
+def test_no_package_module_caches_a_frame():
+    """A query body or pipeline call only returns a plan. ``persist()`` or
+    ``cache()`` in package code registers a session-wide CacheManager entry
+    that outlives the call, and a later rebuild of the same plan then skips
+    its UDF stages. A frame several plan branches read is materialized with
+    a lazy ``localCheckpoint`` instead, which belongs to its plan. Walks
+    every package module with ``ast`` (no imports executed)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(entry.__file__).parent / "docling_japanese_books_spark"
+    offenders = {}
+    for p in sorted(pkg.rglob("*.py")):
+        calls = sorted(
+            {
+                node.func.attr
+                for node in ast.walk(ast.parse(p.read_text(), str(p)))
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache", "unpersist")
+            }
+        )
+        if calls:
+            offenders[str(p.relative_to(pkg))] = calls
+    assert not offenders, f"session caches in package code: {offenders}"
+
+
+def test_query_and_curate_runs_leave_no_cache(spark):
+    """Honest reps: two build-and-run reps of ``dedup_minhash_lsh`` and one
+    ``curate_corpus`` call leave the session's CacheManager empty, and the
+    second query rep recomputes its signatures. Its executed plan holds no
+    InMemory relation, and no Python eval either: the signature UDF runs
+    below the plan's own checkpoint, not over a cached plan."""
+    from docling_japanese_books_spark.pipeline.curate import curate_corpus
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    results = []
+    for _ in range(2):
+        df = entry.queries()["dedup_minhash_lsh"](spark, SF)
+        results.append(sorted(df.collect()))
+        assert cache.isEmpty()
+    assert results[0] == results[1]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemory" not in plan and "ArrowEvalPython" not in plan, plan
+
+    text = (
+        "the quick brown fox jumps over the lazy dog and it was a fine day "
+        "in the park where the children played"
+    )
+    rows = [(f"https://c/{i}", text + (" again" if i == 2 else ""), "en") for i in range(4)]
+    pages = spark.createDataFrame(rows, "url string, text string, lang string")
+    curated, report = curate_corpus(pages, min_quality=0.0, min_chars=1)
+    assert cache.isEmpty()
+    assert report.rows_after_near_dedup == curated.count() == 1

@@ -148,7 +148,7 @@ def test_semdedup_dense_cluster_early_exit(spark):
     v = [1.0, 2.0, 3.0, 4.0]
     ids = [7 * i + 3 for i in range(3000)]
     df = _frame(spark, [v] * 3000, ids=ids)
-    out = semdedup(df, first_k_centroids(df, 2), tau=0.999, checkpoint=True)
+    out = semdedup(df, first_k_centroids(df, 2), tau=0.999)
     kept = [r.vec_id for r in out.filter("kept").collect()]
     assert kept == [3]  # smallest id only; all 2999 twins dropped
 

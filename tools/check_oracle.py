@@ -2,6 +2,9 @@
 on Spark and its oracle_sql()[name] on DuckDB at sf0.01, compare row count,
 sorted-column-name schema, and an order-insensitive value hash.
 
+Every PASS and ROWS line ends with the Spark-side value hash, so two trees
+compare with one ``diff`` of their outputs (the timing field aside).
+
 Usage: python tools/check_oracle.py [name ...]
 """
 
@@ -72,8 +75,8 @@ def main() -> int:
             continue
         dt = time.time() - t0
         if name not in oracles:
-            ok = len(spark_rows) >= 0
-            print(f"ROWS {name}: {len(spark_rows)} rows ({dt:.1f}s) [rows-only]")
+            hs = value_hash(spark_rows, spark_cols)
+            print(f"ROWS {name}: {len(spark_rows)} rows ({dt:.1f}s) [rows-only] {hs}")
             n_rows_only += 1
             continue
         try:
@@ -105,7 +108,7 @@ def main() -> int:
             print(f"FAIL {name}: " + "; ".join(problems))
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(spark_rows)} rows ({dt:.1f}s)")
+            print(f"PASS {name}: {len(spark_rows)} rows ({dt:.1f}s) {hs}")
             n_pass += 1
 
     print(f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail")
