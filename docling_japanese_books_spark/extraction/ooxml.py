@@ -404,12 +404,5 @@ def parse_docx_udf(payload: pd.Series) -> pd.DataFrame:
 
 
 @F.pandas_udf(OOXML_EXTRACT_SCHEMA)
-def parse_office_udf(payload: pd.Series) -> pd.DataFrame:
-    """Arrow-batched mixed DOCX/PPTX corpus extraction (one Python stage,
-    per-row dispatch + error isolation)."""
-    return pd.DataFrame([parse_office(p) for p in payload])
-
-
-@F.pandas_udf(OOXML_EXTRACT_SCHEMA)
 def parse_pptx_udf(payload: pd.Series) -> pd.DataFrame:
     return pd.DataFrame([parse_pptx(p) for p in payload])

@@ -7,26 +7,31 @@ it (SURVEY §4 item 2):
 - every page is assigned a stable bucket = pmod(xxhash64(url), n_buckets) —
   pure function of the url, independent of input partitioning, cluster size,
   or row order;
-- output parquet is partitioned by bucket; writes use dynamic partition
-  overwrite, so re-processing a bucket atomically replaces exactly that
-  bucket's directory — a killed run never double-counts;
+- output parquet is partitioned by bucket (and run_id in versioned mode);
 - a ``_manifest`` parquet table records one row per *completed* bucket with
   lineage (run_id, source) and extraction metrics (rows in/out, blocks
   kept/dropped, parse failures, wall ms). On restart, completed buckets are
   skipped (anti-join of bucket ids against the manifest);
 - buckets are processed in waves (several buckets per Spark job) so progress
   checkpoints land incrementally while jobs stay large enough to saturate
-  executors. Each wave costs ONE Spark job: the partitioned write, whose
-  ``observe()`` metrics supply the wave's manifest stats (rows in/out,
-  blocks, parse failures) without reading the output back. The manifest
-  commit is driver-local, as Iceberg commits its metadata: pyarrow writes
-  the wave's rows to a hidden temp file and renames it into ``_manifest``,
-  so a kill mid-append leaves no visible entry. A run reads the manifest
-  once, up front, also with pyarrow, so a no-op resume runs no Spark job.
+  executors. Each wave costs ONE Spark job with ONE Python stage: a
+  ``mapInArrow`` whose tasks run the batch extractor, write each bucket's
+  rows with pyarrow into a hidden ``data/.staging-<uuid>`` directory and
+  return only per-bucket stats, so the extracted text never crosses back
+  to the JVM. The driver then promotes each wave bucket — removes its live
+  partition directory and renames the staged one in — which is the commit
+  Spark's dynamic partition overwrite makes, so reprocessing a bucket
+  replaces exactly that bucket and a killed run never double-counts. The
+  manifest commit is driver-local too, as Iceberg commits its metadata:
+  pyarrow writes the wave's rows to a hidden temp file and renames it into
+  ``_manifest``, so a kill mid-append leaves no visible entry. A run reads
+  the manifest once, up front, also with pyarrow, so a no-op resume runs
+  no Spark job, and clears any staging directory a killed wave left.
 
 At 100 TB / 1000 executors the same structure holds: n_buckets scales to
-O(10k), wave_size to O(100); the extraction map itself is shuffle-free
-(the only exchange is the write's partitionBy clustering).
+O(10k), wave_size to O(100); a wave is shuffle-free (each task writes the
+buckets of its own input split). The driver and the tasks write through the
+local filesystem, so a cluster run needs the output on a shared mount.
 """
 
 from __future__ import annotations
@@ -41,10 +46,11 @@ from pathlib import Path
 from typing import List, Optional, Sequence
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyarrow.fs import FileSystem
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -187,25 +193,10 @@ def _overwrite_partitions(df: DataFrame, output_dir: str, *cols: str) -> None:
     ).parquet(_data_path(output_dir))
 
 
-# a row whose payload could not be decoded or parsed (SQL, shared by the
-# observed and the read-back stats)
-_PARSE_FAILURE = "status IN ('decode_error', 'parse_error')"
-
-
-def _bucket_sums(wave, **values: str) -> list:
-    """One long sum per (bucket, metric) for ``observe()``: column
-    ``{metric}_{bucket}`` sums the metric's SQL expression over that
-    bucket's rows. Built from SQL text, one JVM parse per column: the same
-    expressions chained from Column operators cost several JVM round trips
-    each (~0.33 s against ~0.01 s for 64 columns, measured on 4 cores)."""
-    return [
-        F.expr(
-            f"CAST(sum(CASE WHEN bucket = {int(b)} THEN {v} ELSE 0 END) AS BIGINT)"
-            f" AS {name}_{int(b)}"
-        )
-        for b in wave
-        for name, v in values.items()
-    ]
+# statuses of a row whose payload could not be decoded or parsed: counted
+# as parse_failures by the wave tasks and by the read-back stats (SQL)
+_FAILED = ("decode_error", "parse_error")
+_PARSE_FAILURE = f"status IN {_FAILED!r}"
 
 
 def _committed_stats(
@@ -236,73 +227,132 @@ def _committed_stats(
     return {int(r[0]): tuple(int(v or 0) for v in r[1:]) for r in rows}
 
 
-def _extract_html(sub: DataFrame) -> DataFrame:
-    """Default extractor: HTML boilerplate strip (north-rule hot path)."""
-    from ..extraction.html import extract_pages
+# a batch extractor's result columns; the data files hold the input's url,
+# warc_ts and lang, then these
+EXTRACTED_COLUMNS = ("text", "status", "blocks_kept", "blocks_dropped")
 
-    return extract_pages(sub).select(
-        "url",
-        "warc_ts",
-        "lang",
-        "bucket",
-        F.col("extracted.text").alias("text"),
-        F.col("extracted.status").alias("status"),
-        F.col("extracted.blocks_kept").alias("blocks_kept"),
-        F.col("extracted.blocks_dropped").alias("blocks_dropped"),
+
+def _extracted(rows: list, kept: str, dropped: Optional[str], blocks) -> pa.RecordBatch:
+    """A batch extractor's result from its per-document dicts: ``kept`` and
+    ``dropped`` name the keys counted as blocks_kept and blocks_dropped
+    (None: 0 for every row), both of Arrow type ``blocks``."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r["text"] for r in rows], pa.string()),
+            pa.array([r["status"] for r in rows], pa.string()),
+            pa.array([r[kept] for r in rows], blocks),
+            pa.array([r[dropped] for r in rows] if dropped else [0] * len(rows), blocks),
+        ],
+        names=list(EXTRACTED_COLUMNS),
     )
 
 
-def extract_pdf_pages(sub: DataFrame, payload_col: str = "html") -> DataFrame:
-    """PDF-corpus extractor for the resumable pipeline: decodes real PDF
-    byte streams (extraction/pdf.parse_pdf_bytes_udf — pypdf when present,
-    pure-Python fallback otherwise). Metric mapping into the shared
-    manifest schema: blocks_kept = decoded spans, blocks_dropped = 0 (the
-    PDF path has no boilerplate classifier; decode failures surface via
-    status, counted as parse_failures)."""
-    from ..extraction.pdf import parse_pdf_bytes_udf
-
-    return sub.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "bucket",
-        parse_pdf_bytes_udf(F.col(payload_col)).alias("e"),
-    ).select(
-        "url",
-        "warc_ts",
-        "lang",
-        "bucket",
-        F.col("e.text").alias("text"),
-        F.col("e.status").alias("status"),
-        F.col("e.n_spans").cast("long").alias("blocks_kept"),
-        F.lit(0).cast("long").alias("blocks_dropped"),
-    )
+# extraction.html.extract_pages' size guard (ref processor.py:231-237)
+MAX_HTML_BYTES = 100 * 1024 * 1024
+_OVERSIZE = dict(text="", status="oversize", blocks_kept=0, blocks_dropped=0)
 
 
-def extract_office_pages(sub: DataFrame, payload_col: str = "html") -> DataFrame:
-    """DOCX/PPTX-corpus extractor for the resumable pipeline (the formats
-    the reference accepts at config.py:52-66 and converts at
-    processor.py:285-319): one Arrow stage, per-row format sniffing
-    (extraction/ooxml.parse_office_udf). blocks_kept = extracted
-    paragraphs; decode failures surface via status like the PDF path."""
-    from ..extraction.ooxml import parse_office_udf
+def extract_html_pages(payload: pa.Array) -> pa.RecordBatch:
+    """Default batch extractor: the HTML boilerplate strip (north-rule hot
+    path, extraction/html.extract_main_content), blocks typed int like its
+    EXTRACT_SCHEMA. A payload over MAX_HTML_BYTES is marked 'oversize'
+    without being parsed."""
+    from ..extraction.html import extract_main_content
 
-    return sub.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "bucket",
-        parse_office_udf(F.col(payload_col)).alias("e"),
-    ).select(
-        "url",
-        "warc_ts",
-        "lang",
-        "bucket",
-        F.col("e.text").alias("text"),
-        F.col("e.status").alias("status"),
-        F.col("e.n_paragraphs").cast("long").alias("blocks_kept"),
-        F.lit(0).cast("long").alias("blocks_dropped"),
-    )
+    rows = [
+        _OVERSIZE if p is not None and len(p) > MAX_HTML_BYTES else extract_main_content(p)
+        for p in payload.to_pylist()
+    ]
+    return _extracted(rows, "blocks_kept", "blocks_dropped", pa.int32())
+
+
+def extract_pdf_pages(payload: pa.Array) -> pa.RecordBatch:
+    """PDF-corpus batch extractor: decodes real PDF byte streams
+    (extraction/pdf.parse_pdf_bytes — pypdf when present, pure-Python
+    fallback otherwise). Metric mapping into the shared manifest schema:
+    blocks_kept = decoded spans, blocks_dropped = 0 (the PDF path has no
+    boilerplate classifier; decode failures surface via status, counted
+    as parse_failures)."""
+    from ..extraction.pdf import parse_pdf_bytes
+
+    rows = [parse_pdf_bytes(p) for p in payload.to_pylist()]
+    return _extracted(rows, "n_spans", None, pa.int64())
+
+
+def extract_office_pages(payload: pa.Array) -> pa.RecordBatch:
+    """DOCX/PPTX-corpus batch extractor (the formats the reference accepts
+    at config.py:52-66 and converts at processor.py:285-319): per-row
+    format sniffing (extraction/ooxml.parse_office). blocks_kept =
+    extracted paragraphs; decode failures surface via status like the PDF
+    path."""
+    from ..extraction.ooxml import parse_office
+
+    rows = [parse_office(p) for p in payload.to_pylist()]
+    return _extracted(rows, "n_paragraphs", None, pa.int64())
+
+
+# what one wave task yields per bucket it wrote; the driver sums it per bucket
+_WAVE_STATS = T.StructType(
+    [T.StructField("bucket", T.LongType(), False)]
+    + [T.StructField(n, T.LongType(), False) for n in ("rows_in", *_STATS)]
+)
+_ARROW_WAVE_STATS = to_arrow_schema(_WAVE_STATS)
+
+
+def _wave_task(extractor, staging: str, run_part: Optional[str]):
+    """The body of a wave's single mapInArrow stage. A task runs
+    ``extractor`` over its Arrow batches, then writes each bucket's rows
+    with pyarrow as ``staging/bucket=b[/run_part]/part-<partition>.parquet``
+    (a hidden temp name, then a rename, so a retried task replaces its own
+    file) and yields one stats row per bucket. Only those rows go back to
+    the JVM; the extracted text never does. The input's url, warc_ts and
+    lang fields are written as they arrive, so a ``timestamp_ntz`` warc_ts
+    stays one."""
+
+    def task(batches):
+        from pyspark import TaskContext
+
+        parts = []
+        for batch in batches:
+            out = extractor(batch.column("html"))
+            if out.num_rows != batch.num_rows:
+                raise ValueError(
+                    f"extractor returned {out.num_rows} rows for {batch.num_rows} payloads"
+                )
+            keep = batch.select(["url", "warc_ts", "lang", "bucket"])
+            parts.append(
+                pa.RecordBatch.from_arrays(
+                    keep.columns + out.columns,
+                    schema=pa.schema([*keep.schema, *out.schema]),
+                )
+            )
+        if not parts:
+            return
+        table = pa.Table.from_batches(parts)
+        name = f"part-{TaskContext.get().partitionId():05d}.parquet"
+        stats = []
+        for b in pc.unique(table["bucket"]).to_pylist():
+            rows = table.filter(pc.equal(table["bucket"], b)).drop_columns("bucket")
+            where = os.path.join(staging, f"bucket={b}", run_part or "")
+            os.makedirs(where, exist_ok=True)
+            tmp = os.path.join(where, f".{name}.{uuid.uuid4().hex}.tmp")
+            pq.write_table(rows, tmp)
+            os.replace(tmp, os.path.join(where, name))
+            failed = pc.is_in(rows["status"], value_set=pa.array(_FAILED))
+            n = rows.num_rows  # one extracted row per input row
+            stats.append(
+                (
+                    b, n, n,
+                    pc.sum(rows["blocks_kept"]).as_py(),
+                    pc.sum(rows["blocks_dropped"]).as_py(),
+                    pc.sum(failed.cast(pa.int64())).as_py(),
+                )
+            )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, pa.int64()) for c in zip(*stats)], schema=_ARROW_WAVE_STATS
+        )
+
+    return task
 
 
 def run_extraction_pipeline(
@@ -320,24 +370,30 @@ def run_extraction_pipeline(
 ) -> PipelineResult:
     """Extract main content for every page, resumable per bucket.
 
-    ``extractor`` maps a bucketed pages frame to rows of
-    (url, warc_ts, lang, bucket, text, status, blocks_kept, blocks_dropped)
-    — default is the HTML boilerplate strip; pass ``extract_pdf_pages`` for
-    a PDF corpus. ``max_waves`` exists for tests (simulate a killed run by
-    stopping after N waves); production leaves it None.
+    ``pages`` needs the columns url, warc_ts, lang and html (the payload).
+    ``extractor`` is a batch function: it takes one Arrow batch's payload
+    column (a ``pyarrow`` binary array) and returns a ``pyarrow.RecordBatch``
+    of EXTRACTED_COLUMNS (text, status, blocks_kept, blocks_dropped) with
+    one row per payload, in order. It runs inside the wave's Python tasks,
+    so it must be importable or picklable there, and it should record a
+    bad document in ``status`` rather than raise: a raise fails the wave,
+    which then commits nothing. Its Arrow types become the data table's.
+    The default is ``extract_html_pages``; ``extract_pdf_pages`` and
+    ``extract_office_pages`` serve PDF and DOCX/PPTX corpora.
+    ``max_waves`` exists for tests (simulate a killed run by stopping
+    after N waves); production leaves it None.
 
     ``versioned=True`` gives the output Iceberg-style snapshot semantics on
-    plain parquet: data is partitioned by (bucket, run_id) so dynamic
-    overwrite replaces only THIS run's partitions and every earlier run's
-    data stays immutable on disk; the manifest is the snapshot log (one
-    monotonically increasing ``snapshot`` id per run, latest entry per
-    bucket = current table). Read with ``read_snapshot`` (current or
-    ``as_of=`` an earlier snapshot id). ``reprocess`` lists buckets to redo
-    even though the manifest marks them done (re-crawl / fixed extractor):
-    in versioned mode that creates a new snapshot without destroying the
-    old one.
+    plain parquet: data is partitioned by (bucket, run_id) so a wave
+    replaces only THIS run's partitions and every earlier run's data stays
+    immutable on disk; the manifest is the snapshot log (one monotonically
+    increasing ``snapshot`` id per run, latest entry per bucket = current
+    table). Read with ``read_snapshot`` (current or ``as_of=`` an earlier
+    snapshot id). ``reprocess`` lists buckets to redo even though the
+    manifest marks them done (re-crawl / fixed extractor): in versioned
+    mode that creates a new snapshot without destroying the old one.
     """
-    extractor = extractor or _extract_html
+    extractor = extractor or extract_html_pages
 
     entries = _manifest_entries(output_dir)
     done = {r.bucket for r in entries if r.status == "done"}
@@ -354,6 +410,18 @@ def run_extraction_pipeline(
             "travel — reprocess under a fresh run_id",
         )
 
+    data = Path(_data_path(output_dir)).absolute()
+    # a killed wave's staged files: hidden from every reader, never promoted
+    for leftover in data.glob(".staging-*"):
+        shutil.rmtree(leftover, ignore_errors=True)
+    # the partition directory name Spark's writer and reader use for run_id
+    run_part = (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString("run_id", run_id)
+        if versioned
+        else None
+    )
+
     pages_b = pages.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
 
     waves: List[Sequence[int]] = [
@@ -366,65 +434,40 @@ def run_extraction_pipeline(
     total_rows_out = 0
     for wave in waves:
         t0 = time.time()
-        sub = pages_b.filter(F.col("bucket").isin([int(b) for b in wave]))
-        # rows_in counts the bucket's INPUT rows (pre-extraction) so the
-        # kept/dropped accounting stays real even if a filter is ever added
-        # above. Observation metrics piggyback on the write action — the
-        # wave makes ONE pass over the input, not a second column-pruned
-        # scan per wave (which at 100 TB is an extra url-column pass).
-        obs_in = Observation(f"wave_{wave[0]}")
-        sub = sub.observe(obs_in, *_bucket_sums(wave, rows_in="1"))
-        # second observation on the same single write pass: the per-bucket
-        # output stats the manifest records. Every observed row is a
-        # written row and Spark applies an action's accumulators once per
-        # task, so these equal a read-back of the committed partitions
-        # without the extra job.
-        obs_out = Observation(f"wave_out_{wave[0]}")
-        extracted = extractor(sub).observe(
-            obs_out,
-            *_bucket_sums(
-                wave,
-                rows_out="1",
-                blocks_kept="blocks_kept",
-                blocks_dropped="blocks_dropped",
-                parse_failures=f"CAST({_PARSE_FAILURE} AS BIGINT)",
-            ),
-        )
-        # dynamic overwrite: only the partitions present in `extracted` are
-        # replaced; a rerun of the same wave is idempotent. Versioned mode
-        # adds run_id to the partitioning, so older runs' data is immutable.
-        if versioned:
-            extracted = extracted.withColumn("run_id", F.lit(run_id))
-            _overwrite_partitions(extracted, output_dir, "bucket", "run_id")
-        else:
-            _overwrite_partitions(extracted, output_dir, "bucket")
+        staging = data / f".staging-{uuid.uuid4().hex}"
+        staging.mkdir(parents=True)
+        # the wave's one Spark job: one pass over the input, extraction and
+        # the staged writes in the same Python stage, per-bucket stats back
+        stats = {int(b): [0] * (1 + len(_STATS)) for b in wave}
+        for r in (
+            pages_b.filter(F.col("bucket").isin(list(wave)))
+            .select("url", "warc_ts", "lang", "bucket", "html")
+            .mapInArrow(_wave_task(extractor, str(staging), run_part), _WAVE_STATS)
+            .collect()
+        ):
+            stats[r.bucket] = [a + v for a, v in zip(stats[r.bucket], r[1:])]
+        # promote: each wave bucket's live partition is replaced by what
+        # was staged for it, or only cleared when nothing was (every page
+        # of the bucket is gone from the input), so the committed data
+        # always matches the recorded rows_out. Spark's dynamic partition
+        # overwrite commits the same way.
+        for b in stats:
+            part = Path(f"bucket={b}", run_part or "")
+            live, staged = data / part, staging / part
+            if live.exists():
+                shutil.rmtree(live)
+            if staged.exists():
+                live.parent.mkdir(parents=True, exist_ok=True)
+                staged.rename(live)
+        shutil.rmtree(staging)
         wall_ms = int((time.time() - t0) * 1000)
 
-        # the write action above populated both observations; a sum over an
-        # all-empty wave comes back null, so coalesce to 0 (empty buckets
-        # are legal: n_buckets can exceed the distinct-url count)
-        got_in, got_out = obs_in.get, obs_out.get
-        manifest_rows = []
-        for b in map(int, wave):
-            stats = [int(got_out[f"{k}_{b}"] or 0) for k in _STATS]
-            # a bucket whose new extraction yields zero rows keeps its PRIOR
-            # partition on disk (dynamic overwrite never touches it): clear
-            # it so the committed data matches the recorded rows_out. In
-            # versioned mode that partition is this run_id's orphan from a
-            # killed attempt — the clash guard proved no snapshot holds it.
-            if stats[0] == 0:
-                stale = Path(_data_path(output_dir)) / f"bucket={b}"
-                if versioned:
-                    stale = stale / f"run_id={run_id}"
-                if stale.exists():
-                    shutil.rmtree(stale)
-            rows_in = int(got_in[f"rows_in_{b}"] or 0)
-            manifest_rows.append(
-                (b, run_id, source, "done", rows_in, *stats, wall_ms, snapshot)
-            )
-            total_rows_out += stats[0]
-            processed.append(b)
+        manifest_rows = [
+            (b, run_id, source, "done", *s, wall_ms, snapshot) for b, s in stats.items()
+        ]
         _append_manifest(output_dir, manifest_rows)
+        total_rows_out += sum(s[1] for s in stats.values())
+        processed.extend(stats)
 
     return PipelineResult(
         buckets_processed=processed,

@@ -16,6 +16,7 @@ shuffles, what broadcasts.
 
 from __future__ import annotations
 
+import os
 from typing import Callable, Dict, NamedTuple, Optional
 from weakref import WeakKeyDictionary
 
@@ -48,20 +49,27 @@ def query(name: str, oracle: Optional[str] = None):
 # every spark.read.parquet call (~0.11 s warm, measured), and the bench
 # rebuilds each query from scratch per rep — 1-3 scans per query made
 # relation resolution the largest fixed per-rep cost. Every action on a
-# memoized frame still scans parquet; no row-level data is cached.
+# memoized frame still scans parquet; no row-level data is cached. An entry
+# holds the path's (st_mtime_ns, st_size) from when it was resolved, so a
+# file rewritten in the same session is resolved again (one os.stat per
+# call); a path os.stat cannot see (a remote URI) is not memoized.
 _SCAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     try:
+        st = os.stat(path)
         per = _SCAN_MEMO.setdefault(spark, {})
-    except TypeError:  # non-weakrefable session stand-in: skip the memo
+    except (OSError, TypeError):
+        # no local file (a remote URI, or a missing path the read reports),
+        # or a non-weakrefable session stand-in: skip the memo
         return spark.read.parquet(path)
-    df = per.get(path)
-    if df is None:
-        df = per[path] = spark.read.parquet(path)
-    return df
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = per.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = per[path] = (stamp, spark.read.parquet(path))
+    return hit[1]
 
 
 # Fan-out ceiling: above this estimated size the file splitter already

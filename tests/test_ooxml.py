@@ -243,10 +243,15 @@ def test_parse_office_sniffs_format_not_extension():
     assert parse_office(buf.getvalue())["status"] == "decode_error"
 
 
-def test_extract_office_pages_pipeline_shape(spark):
-    """The resumable pipeline's office extractor: manifest-schema output,
-    mixed DOCX/PPTX corpus in one Arrow stage, failures isolated."""
+def test_extract_office_pages_pipeline_shape():
+    """The resumable pipeline's office batch extractor: one Arrow batch of a
+    mixed DOCX/PPTX corpus in, one extracted row per payload out, which the
+    pipeline writes beside the page's url, warc_ts, lang and bucket as a
+    manifest-schema row; failures isolated."""
     import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import Row
 
     from docling_japanese_books_spark.pipeline.driver import extract_office_pages
 
@@ -256,10 +261,11 @@ def test_extract_office_pages_pipeline_shape(spark):
         ("https://a/y.pptx", ts, "en", 1, slides_to_pptx([["s1"], ["s2"]])),
         ("https://a/z.docx", ts, "en", 0, b"corrupt"),
     ]
-    sub = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, lang string, bucket int, html binary"
-    )
-    out = {r.url: r for r in extract_office_pages(sub).collect()}
+    extracted = extract_office_pages(pa.array([r[4] for r in rows], pa.binary()))
+    out = {
+        url: Row(url=url, warc_ts=ts, lang=lang, bucket=bucket, **e)
+        for (url, ts, lang, bucket, _), e in zip(rows, extracted.to_pylist())
+    }
     assert out["https://a/x.docx"].text == "p one\np two"
     assert out["https://a/x.docx"].blocks_kept == 2
     assert out["https://a/y.pptx"].text == "s1\n\ns2"

@@ -77,10 +77,11 @@ def _jobs_in_group(spark, group, fn):
 
 
 def test_single_input_pass_per_wave(spark, out_dir):
-    """rows_in and the output stats come from Observation metrics on the
-    write action — the wave must make exactly ONE pass over the input (a
-    second column-pruned rescan per wave is an extra pass over the url
-    column at 100 TB) and must not read its output back.
+    """rows_in and the output stats come back from the wave's own tasks,
+    which extract and write in one mapInArrow stage — the wave must make
+    exactly ONE pass over the input (a second column-pruned rescan per wave
+    is an extra pass over the url column at 100 TB) and must not read its
+    output back.
 
     Pin it with the Spark job count for one single-wave run: any
     reintroduced per-wave input action adds a job and trips the bound."""
@@ -92,13 +93,13 @@ def test_single_input_pass_per_wave(spark, out_dir):
             spark, pages, out_dir, run_id="j", n_buckets=2, wave_size=2
         ),
     )
-    # measured: 1 job for one wave on a fresh table (the write carrying
-    # both observations; the manifest append is a driver-local pyarrow
-    # write, no job); a Spark-side manifest append measured 2, a
-    # committed-data read-back for the stats 5, a per-wave groupBy-count
-    # rescan 7
+    # measured: 1 job for one wave on a fresh table (the mapInArrow stage
+    # that writes and returns the stats; the promote and the manifest
+    # append are driver-local, no job); a Spark-side manifest append
+    # measured 2, a committed-data read-back for the stats 5, a per-wave
+    # groupBy-count rescan 7
     assert len(jobs) == 1, f"wave ran {len(jobs)} jobs — extra input pass?"
-    # and the observation-supplied lineage is still exact
+    # and the task-supplied lineage is still exact
     m = read_manifest(spark, out_dir)
     assert m.agg(F.sum("rows_in").alias("s")).collect()[0].s == 100
 
@@ -319,9 +320,9 @@ def _pdf_pages(spark):
 
 @pytest.mark.parametrize("flavour", ["html", "pdf", "versioned"])
 def test_observed_stats_match_committed_data(spark, out_dir, flavour):
-    """The manifest's per-bucket output stats come from the write's
-    observe() metrics, not a read-back: they must equal a groupBy over the
-    data actually committed under each entry's partition."""
+    """The manifest's per-bucket output stats come from the stats rows the
+    writing tasks return, not a read-back: they must equal a groupBy over
+    the data actually committed under each entry's partition."""
     from docling_japanese_books_spark.pipeline.driver import extract_pdf_pages
 
     kw = dict(n_buckets=4, wave_size=2)
@@ -386,8 +387,8 @@ def test_rerun_is_idempotent(spark, out_dir):
 
 def test_empty_buckets_do_not_crash(spark, out_dir):
     """A wave whose buckets all have zero input rows is legal (n_buckets
-    can exceed the distinct-url count): the Observation sum returns null
-    for those buckets and rows_in must coalesce to 0, not TypeError."""
+    can exceed the distinct-url count): no task returns a stats row for
+    those buckets, and their entries must record 0 rows, not fail."""
     pages = generate_pages(spark, 3, seed=5)  # 3 urls across 64 buckets
     r = run_extraction_pipeline(
         spark, pages, out_dir, run_id="e", n_buckets=64, wave_size=8
@@ -595,10 +596,9 @@ def test_versioned_killed_run_resumes_same_run_id(spark, out_dir):
 
 
 def test_nonversioned_zero_row_reprocess_clears_stale_partition(spark, out_dir):
-    """Dynamic partition overwrite only replaces partitions present in the
-    new output: a redone bucket whose re-extraction yields ZERO rows must
-    have its prior partition cleared explicitly, or the read-back counts a
-    previous run's rows as this run's rows_out."""
+    """A redone bucket whose re-extraction yields ZERO rows stages no file:
+    its promote must still clear the prior partition, or the table serves
+    a previous run's rows beside this run's rows_out of 0."""
     pages = generate_pages(spark, 100, seed=29)
     run_extraction_pipeline(
         spark, pages, out_dir, run_id="full", n_buckets=4, wave_size=4
@@ -950,3 +950,195 @@ def test_compact_buckets_preserves_rows_and_history(spark, out_dir):
         compact_buckets(spark, out_dir, run_id="cmp1")
     noop = compact_buckets(spark, out_dir, run_id="cmp2", buckets=[999])
     assert noop.buckets_processed == [] and noop.snapshot == c.snapshot
+
+
+def _pages_parquet(spark, path, payloads):
+    """A crawl table as perfbench writes it (pyarrow, ``timestamp[us]``
+    warc_ts, which Spark reads as timestamp_ntz), read back with Spark."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(payloads)
+    pq.write_table(
+        pa.table(
+            {
+                "url": [f"https://site.example/{i}" for i in range(n)],
+                "warc_ts": pa.array([dt.datetime(2024, 5, 1)] * n, pa.timestamp("us")),
+                "html": pa.array(payloads, pa.binary()),
+                "text": [""] * n,
+                "lang": ["ja"] * n,
+            }
+        ),
+        path,
+    )
+    return spark.read.parquet(path)
+
+
+def test_wave_is_one_python_stage_and_no_spark_write(spark, out_dir):
+    """A wave extracts and writes in ONE mapInArrow stage: the tasks write
+    their bucket files with pyarrow, so the wave's only SQL execution holds
+    exactly one Python node (MapInArrow), no ArrowEvalPython (whose output
+    would carry the text back to the JVM) and no Spark file-write command."""
+    import re
+
+    pages = _pages_parquet(
+        spark, f"{out_dir}/pages.parquet",
+        [f"<p>page {i} has enough text to keep</p>".encode() for i in range(40)],
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():  # the store keeps the latest executions only
+        execs = store.executionsList()
+        return {e.executionId(): e for e in map(execs.apply, range(execs.size()))}
+
+    last = max(executions(), default=-1)
+    run_extraction_pipeline(
+        spark, pages, f"{out_dir}/t", run_id="p", n_buckets=2, wave_size=2
+    )
+    (plan,) = [
+        e.physicalPlanDescription() for i, e in executions().items() if i > last
+    ]
+    nodes = re.findall(r"^\(\d+\) (\w[\w ]*?)\s*(?:\[codegen id : \d+\])?$", plan, re.M)
+    python = [n for n in nodes if re.search("Python|Arrow|Pandas", n)]
+    assert python == ["MapInArrow"], nodes
+    assert not [n for n in nodes if re.search("InsertInto|Write", n)], nodes
+    assert spark.read.parquet(f"{out_dir}/t/data").count() == 40
+
+
+@pytest.mark.parametrize("ts", ["timestamp_ntz", "timestamp"])
+@pytest.mark.parametrize("kind", ["html", "pdf", "office"])
+def test_data_schema_matches_spark_writer(spark, out_dir, kind, ts):
+    """The tasks write the data files with pyarrow; Spark must read ``data/``
+    with the schema its own partitioned writer gave it: the input's warc_ts
+    type carried through (timestamp_ntz stays timestamp_ntz), blocks_* int
+    for HTML and long for PDF and office, the partition columns last, in
+    plain and versioned mode."""
+    import datetime as dt
+
+    from docling_japanese_books_spark.extraction.ooxml import paragraphs_to_docx
+    from docling_japanese_books_spark.extraction.pdf_bytes import text_to_pdf
+    from docling_japanese_books_spark.pipeline.driver import (
+        extract_office_pages,
+        extract_pdf_pages,
+    )
+
+    payload, extractor, blocks = {
+        "html": (lambda i: f"<p>page number {i} body text</p>".encode(), None, "int"),
+        "pdf": (lambda i: text_to_pdf(f"pdf number {i}"), extract_pdf_pages, "bigint"),
+        "office": (
+            lambda i: paragraphs_to_docx([f"docx number {i}"]),
+            extract_office_pages,
+            "bigint",
+        ),
+    }[kind]
+    pages = _pages_parquet(
+        spark, f"{out_dir}/pages.parquet", [payload(i) for i in range(6)]
+    )
+    if ts == "timestamp":
+        pages = pages.withColumn("warc_ts", F.lit(dt.datetime(2024, 5, 1)))
+    for versioned in (False, True):
+        table = f"{out_dir}/{versioned}"
+        run_extraction_pipeline(
+            spark, pages, table, run_id="s", n_buckets=2, wave_size=2,
+            versioned=versioned, extractor=extractor,
+        )
+        data = spark.read.parquet(f"{table}/data")
+        assert data.schema.simpleString() == (
+            f"struct<url:string,warc_ts:{ts},lang:string,text:string,"
+            f"status:string,blocks_kept:{blocks},blocks_dropped:{blocks},"
+            f"bucket:int{',run_id:string' if versioned else ''}>"
+        )
+        assert data.filter("status = 'ok'").count() == 6
+
+
+def test_extractor_crash_mid_wave_commits_nothing(spark, out_dir):
+    """A batch extractor that raises partway through a wave, after other
+    tasks staged their bucket files: no new row is visible, a reprocessed
+    plain-mode bucket keeps its previous rows, the manifest is unchanged,
+    and the leftover ``.staging-*`` directory is seen by neither Spark's
+    reader nor the manifest reader. The next run clears the leftover and
+    commits each bucket once."""
+    import glob
+    import time
+
+    from docling_japanese_books_spark.pipeline.driver import (
+        _manifest_entries,
+        extract_html_pages,
+    )
+
+    marker = b"<p>the extractor fails on this page</p>"
+    staged = f"{out_dir}/data/.staging-*/bucket=*/part-*.parquet"
+
+    def crashing(payload):
+        if marker in payload.to_pylist():
+            # let the wave's other tasks stage their files first
+            deadline = time.time() + 30
+            while len(glob.glob(staged)) < 3 and time.time() < deadline:
+                time.sleep(0.05)
+            time.sleep(0.5)
+            raise RuntimeError("extractor crashed on the marker page")
+        return extract_html_pages(payload)
+
+    pages = generate_pages(spark, 100, seed=71)
+    kw = dict(n_buckets=4, wave_size=4)
+    run_extraction_pipeline(spark, pages, out_dir, run_id="a", **kw)
+    rows = lambda: sorted(  # noqa: E731
+        tuple(r) for r in spark.read.parquet(f"{out_dir}/data")
+        .select("url", "text", "bucket").collect()
+    )
+    before, entries = rows(), _manifest_entries(out_dir)
+
+    last_url = pages.agg(F.max("url")).first()[0]
+    marked = pages.withColumn(
+        "html", F.when(F.col("url") == last_url, F.lit(marker)).otherwise(F.col("html"))
+    )
+    with pytest.raises(Exception, match="marker page"):
+        run_extraction_pipeline(
+            spark, marked, out_dir, run_id="b", reprocess=range(4),
+            extractor=crashing, **kw,
+        )
+    assert glob.glob(staged), "no task staged a file before the crash"
+    assert len(glob.glob(f"{out_dir}/data/.staging-*")) == 1
+    assert rows() == before
+    assert _manifest_entries(out_dir) == entries
+    assert read_manifest(spark, out_dir).count() == 4
+
+    r = run_extraction_pipeline(
+        spark, pages, out_dir, run_id="c", reprocess=range(4), **kw
+    )
+    assert sorted(r.buckets_processed) == [0, 1, 2, 3] and r.rows_out == 100
+    assert not glob.glob(f"{out_dir}/data/.staging-*")
+    assert rows() == before
+    m = read_manifest(spark, out_dir).filter("run_id = 'c'").collect()
+    assert sorted(e.bucket for e in m) == [0, 1, 2, 3]
+    assert sum(e.rows_out for e in m) == 100
+
+
+def test_html_batch_extractor_matches_kernel_and_guards_size(monkeypatch):
+    """The default batch extractor returns extract_main_content's fields per
+    payload, in order, and marks a payload over MAX_HTML_BYTES 'oversize'
+    without parsing it (extraction.html.extract_pages' size guard)."""
+    import pyarrow as pa
+
+    from docling_japanese_books_spark.extraction.html import extract_main_content
+    from docling_japanese_books_spark.pipeline import driver
+
+    payloads = [
+        b"<p>a paragraph long enough to keep</p><a>nav</a>",
+        None,
+        b"<p>short</p>",
+        b"<p>x</p>" * 4,
+    ]
+    out = driver.extract_html_pages(pa.array(payloads, pa.binary()))
+    assert out.schema.names == list(driver.EXTRACTED_COLUMNS)
+    assert out.schema.field("blocks_kept").type == pa.int32()
+    for got, p in zip(out.to_pylist(), payloads):
+        want = extract_main_content(p)
+        assert got == {k: want[k] for k in driver.EXTRACTED_COLUMNS}
+
+    monkeypatch.setattr(driver, "MAX_HTML_BYTES", 16)
+    out = driver.extract_html_pages(pa.array(payloads, pa.binary())).to_pylist()
+    assert [r["status"] for r in out] == ["oversize", "empty", "no_content", "oversize"]
+    assert out[0] == dict(text="", status="oversize", blocks_kept=0, blocks_dropped=0)

@@ -269,3 +269,25 @@ def test_query_and_curate_runs_leave_no_cache(spark):
     curated, report = curate_corpus(pages, min_quality=0.0, min_chars=1)
     assert cache.isEmpty()
     assert report.rows_after_near_dedup == curated.count() == 1
+
+
+def test_scan_memo_sees_a_file_rewritten_in_session(spark, tmp_path):
+    """``t()`` memoizes resolved scans per session, keyed by the file's
+    (st_mtime_ns, st_size): a parquet rewritten in the same session must be
+    resolved again and read with its new rows, while an unchanged file
+    keeps its memoized frame."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_japanese_books_spark.queries.relational import t
+
+    path = tmp_path / "docs.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2, 3]}), path)
+    first = t(spark, str(tmp_path), "docs")
+    assert first.count() == 3
+    assert t(spark, str(tmp_path), "docs") is first
+
+    pq.write_table(pa.table({"doc_id": [10, 20, 30, 40, 50]}), path)
+    again = t(spark, str(tmp_path), "docs")
+    assert again is not first
+    assert sorted(r.doc_id for r in again.collect()) == [10, 20, 30, 40, 50]
