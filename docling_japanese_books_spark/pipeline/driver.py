@@ -50,7 +50,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyarrow.fs import FileSystem
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -193,6 +193,20 @@ def _overwrite_partitions(df: DataFrame, output_dir: str, *cols: str) -> None:
     ).parquet(_data_path(output_dir))
 
 
+def _bucket_in(buckets) -> Column:
+    """``bucket IN (...)`` over a non-empty bucket list, parsed in one py4j
+    call (``Column.isin`` makes one literal round trip per bucket); the
+    analyzed predicate is the same ``In``."""
+    return F.expr(f"bucket IN ({', '.join(str(int(b)) for b in buckets)})")
+
+
+def _run_id_dir(spark: SparkSession, run_id: str) -> str:
+    """The partition directory name Spark's writer and reader use for
+    ``run_id`` (``run_id=2024-05-01T00%3A00`` for ``2024-05-01T00:00``)."""
+    catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog
+    return catalog.ExternalCatalogUtils.getPartitionPathString("run_id", run_id)
+
+
 # statuses of a row whose payload could not be decoded or parsed: counted
 # as parse_failures by the wave tasks and by the read-back stats (SQL)
 _FAILED = ("decode_error", "parse_error")
@@ -210,7 +224,7 @@ def _committed_stats(
         committed = (
             spark.read.parquet(_data_path(output_dir))
             .filter(F.col("run_id") == run_id)
-            .filter(F.col("bucket").isin([int(b) for b in buckets]))
+            .filter(_bucket_in(buckets))
         )
         rows = (
             committed.groupBy("bucket")
@@ -414,13 +428,7 @@ def run_extraction_pipeline(
     # a killed wave's staged files: hidden from every reader, never promoted
     for leftover in data.glob(".staging-*"):
         shutil.rmtree(leftover, ignore_errors=True)
-    # the partition directory name Spark's writer and reader use for run_id
-    run_part = (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString("run_id", run_id)
-        if versioned
-        else None
-    )
+    run_part = _run_id_dir(spark, run_id) if versioned else None
 
     pages_b = pages.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
 
@@ -440,7 +448,7 @@ def run_extraction_pipeline(
         # the staged writes in the same Python stage, per-bucket stats back
         stats = {int(b): [0] * (1 + len(_STATS)) for b in wave}
         for r in (
-            pages_b.filter(F.col("bucket").isin(list(wave)))
+            pages_b.filter(_bucket_in(wave))
             .select("url", "warc_ts", "lang", "bucket", "html")
             .mapInArrow(_wave_task(extractor, str(staging), run_part), _WAVE_STATS)
             .collect()
@@ -575,7 +583,8 @@ def expire_snapshots(
     _expiry_watermark_path(output_dir).write_text(str(watermark))
     deleted = 0
     for bucket, run_id in sorted(all_pairs - live):
-        part = Path(_data_path(output_dir)) / f"bucket={bucket}" / f"run_id={run_id}"
+        run_dir = _run_id_dir(spark, run_id)
+        part = Path(_data_path(output_dir), f"bucket={bucket}", run_dir)
         if part.exists():
             shutil.rmtree(part)
             deleted += 1
@@ -651,7 +660,7 @@ def delete_where(
     _check_run_id_clash(entries, run_id, affected, "delete under a fresh run_id")
 
     survivors = (
-        current.filter(F.col("bucket").isin([int(b) for b in affected]))
+        current.filter(_bucket_in(affected))
         .filter(~cond)
         .drop("run_id")
         .withColumn("run_id", F.lit(run_id))
@@ -728,7 +737,7 @@ def merge_into(
 
     current = read_snapshot(spark, output_dir)
     kept = (
-        current.filter(F.col("bucket").isin([int(b) for b in affected]))
+        current.filter(_bucket_in(affected))
         .join(src.select(key_col), key_col, "left_anti")  # matched -> replaced
         .drop("run_id")
     )
@@ -787,7 +796,7 @@ def compact_buckets(
     _check_run_id_clash(entries, run_id, targets, "compact under a fresh run_id")
     current = read_snapshot(spark, output_dir)
     _overwrite_partitions(
-        current.filter(F.col("bucket").isin([int(b) for b in targets]))
+        current.filter(_bucket_in(targets))
         .drop("run_id")
         .withColumn("run_id", F.lit(run_id))
         .repartition(max(1, target_files) * len(targets), "bucket")

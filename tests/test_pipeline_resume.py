@@ -3,6 +3,7 @@ on restart; reruns are idempotent (no double counting)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -553,6 +554,60 @@ def test_expire_snapshots(spark, out_dir):
         read_snapshot(spark, out_dir, as_of=1)
     # idempotent: nothing else to delete
     assert expire_snapshots(spark, out_dir, keep_last=2) == 0
+
+
+def test_expire_snapshots_with_escaped_run_ids(spark, out_dir):
+    """A run_id with a character Spark escapes in partition directory names
+    (``:`` -> ``%3A``) is expired through the directory Spark wrote."""
+    import glob
+
+    from docling_japanese_books_spark.pipeline.driver import (
+        expire_snapshots,
+        read_snapshot,
+    )
+
+    pages = generate_pages(spark, 40, seed=23)
+    for i, rid in enumerate(f"2024-0{m}-01T00:00" for m in (5, 6, 7)):
+        run_extraction_pipeline(
+            spark, pages, out_dir, run_id=rid, n_buckets=2, wave_size=2,
+            versioned=True, reprocess=[0, 1] if i else None,
+        )
+
+    def run_dirs():
+        return sorted(
+            os.path.relpath(p, f"{out_dir}/data")
+            for p in glob.glob(f"{out_dir}/data/bucket=*/run_id=*")
+        )
+
+    assert len(run_dirs()) == 6
+    assert expire_snapshots(spark, out_dir, keep_last=2) == 2
+    assert [d for d in run_dirs() if "2024-05" in d] == []
+    assert len(run_dirs()) == 4
+    assert read_snapshot(spark, out_dir).count() == 40
+    assert read_snapshot(spark, out_dir, as_of=2).count() == 40
+
+
+def test_bucket_filter_plans_like_isin(spark):
+    """The bucket filter parsed from one SQL string plans exactly like the
+    per-literal ``Column.isin`` it replaces."""
+    import contextlib
+    import io
+    import re
+
+    from docling_japanese_books_spark.pipeline.driver import _bucket_in
+
+    df = spark.range(64).withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(8)))
+
+    def plan(frame):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            frame.explain("formatted")
+        return re.sub(r"#\d+", "#", out.getvalue())
+
+    wave = [1, 3, 4, 7]
+    assert plan(df.filter(_bucket_in(wave))) == plan(
+        df.filter(F.col("bucket").isin(wave))
+    )
 
 
 def test_versioned_run_id_reuse_raises(spark, out_dir):
